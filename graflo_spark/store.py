@@ -11,8 +11,18 @@ Scale notes: tables are hash-bucketed on the merge key
 buckets the incoming batch hashes into: existing rows are read via
 manifest file-list pruning and the rewrite lands in immutable per-commit
 data directories — a 10k-row batch against a 10 TB table rewrites ~10k
-rows worth of buckets, not the table. The merge itself is a single
-shuffle on the identity columns.
+rows worth of buckets, not the table. The write is two shuffles: the
+merge aggregate on the identity columns, then ``repartition(__b)`` so
+each bucket lands as one file.
+
+Bucket count follows the data: a table's first commit takes the smallest
+power of two that keeps a bucket under ``TARGET_BUCKET_BYTES`` (one scan
+split, one merge task), and each manifest records the count it hashed
+with. A merge that would leave a bucket above twice the target re-buckets
+the whole table at the next fitting power of two, so a table born from a
+tiny micro-batch keeps O(batch) upserts and its total rewrite work stays
+O(final size) (doubling is a geometric series). ``compact()`` re-sizes
+from the table's current bytes, which can also shrink it.
 
 Commit protocol (Iceberg-style optimistic concurrency): the table's
 current state is ONE manifest file ``commits/v<N>.json`` mapping each
@@ -55,6 +65,19 @@ from graflo_spark.manifest import CoreSchema, EdgeId, IndexConfig, IndexType
 
 BUCKET_COL = "__b"
 
+# Spark's default spark.sql.files.maxPartitionBytes: a bucket of this size
+# is one scan split and one merge task.
+TARGET_BUCKET_BYTES = 128 * 1024**2
+
+
+def _fit_buckets(nbytes: float, at_least: int = 1) -> int:
+    """Smallest power of two, not below ``at_least``, that keeps
+    ``nbytes`` spread over that many buckets under TARGET_BUCKET_BYTES."""
+    n = at_least
+    while nbytes > n * TARGET_BUCKET_BYTES:
+        n *= 2
+    return n
+
 
 class GraphStore:
     def __init__(
@@ -62,7 +85,7 @@ class GraphStore:
         spark: SparkSession,
         root: str,
         schema: CoreSchema,
-        n_buckets: int = 64,
+        n_buckets: int | None = None,
         snapshot_keep: int = 2,
         snapshot_size_cap_bytes: int = 10 * 1024**3,
         gc_grace_seconds: float = 300.0,
@@ -70,10 +93,9 @@ class GraphStore:
         self.spark = spark
         self.root = root
         self.schema = schema
-        # Size so one bucket of the LARGEST table fits an executor's merge
-        # aggregate: at 100 TB raise to O(10k). Recorded per table at first
-        # write (`_meta.json`) so later upserts keep hashing consistently
-        # even if the store object is built with a different default.
+        # Override of a table's FIRST commit bucket count (None: sized from
+        # the batch, see module docstring). Later commits hash with the
+        # count their manifest records, whatever this store object says.
         self.n_buckets = n_buckets
         # Snapshot retention: keep `snapshot_keep` full-table generations for
         # rollback — but a full snapshot DOUBLES a table's storage, which at
@@ -96,34 +118,14 @@ class GraphStore:
         return os.path.join(table_dir, "buckets")
 
     def _table_buckets(self, table_dir: str) -> int:
+        """Bucket count of a LEGACY table (pre-manifest bucket dirs, or
+        manifests that predate the recorded ``n_buckets``): the count its
+        ``_meta.json`` pinned, else the fixed default those stores used."""
         meta_path = os.path.join(table_dir, "_meta.json")
         if os.path.exists(meta_path):
             with open(meta_path) as f:
                 return json.load(f)["n_buckets"]
-        return self.n_buckets
-
-    def _record_buckets(self, table_dir: str) -> int:
-        """First writer pins the table's bucket count; the pin is an
-        atomic create-or-fail (hard link of a fully-written temp file) so
-        two concurrent first-writers configured with DIFFERENT defaults
-        can't clobber each other — the loser re-reads the winner's value
-        and hashes consistently."""
-        meta_path = os.path.join(table_dir, "_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                return json.load(f)["n_buckets"]
-        os.makedirs(table_dir, exist_ok=True)
-        tmp = os.path.join(table_dir, f".meta-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-        try:
-            os.link(tmp, meta_path)
-            return self.n_buckets
-        except FileExistsError:
-            with open(meta_path) as f:
-                return json.load(f)["n_buckets"]
-        finally:
-            os.unlink(tmp)
+        return 64
 
     @staticmethod
     def _bucket_expr(key_cols: list[str], n: int) -> F.Column:
@@ -150,16 +152,26 @@ class GraphStore:
 
     def _current_manifest(self, table_dir: str) -> tuple[int, dict[str, str]]:
         """(version, {bucket_id: table-relative data dir}) of the newest
-        committed manifest; when the table has none, (floor, {}) where
-        floor is the snapshot-era version counter (_write_snapshot) or 0
-        for a genuinely fresh table — the counter NEVER restarts across a
-        schema-evolution snapshot, so a post-evolution commit can never
-        alias a version number some graph manifest pinned pre-evolution.
-        Manifest files appear atomically (hard-link publish), so the
-        newest one present is always complete."""
+        committed manifest; see :meth:`_current_commit`."""
+        version, buckets, _n = self._current_commit(table_dir)
+        return version, buckets
+
+    def _current_commit(
+        self, table_dir: str
+    ) -> tuple[int, dict[str, str], int]:
+        """(version, {bucket_id: table-relative data dir}, n_buckets) of
+        the newest committed manifest; when the table has none,
+        (floor, {}, 0) where floor is the snapshot-era version counter
+        (_write_snapshot) or 0 for a genuinely fresh table — the counter
+        NEVER restarts across a schema-evolution snapshot, so a
+        post-evolution commit can never alias a version number some graph
+        manifest pinned pre-evolution. Manifests written before the count
+        was recorded hash with :meth:`_table_buckets`. Manifest files
+        appear atomically (hard-link publish), so the newest one present
+        is always complete."""
         cdir = self._commits_dir(table_dir)
         if not os.path.isdir(cdir):
-            return self._snapshot_floor(table_dir), {}
+            return self._snapshot_floor(table_dir), {}, 0
         versions = sorted(
             (
                 int(f[1:-5])
@@ -169,13 +181,16 @@ class GraphStore:
             reverse=True,
         )
         if not versions:
-            return self._snapshot_floor(table_dir), {}
+            return self._snapshot_floor(table_dir), {}, 0
         v = versions[0]
         with open(os.path.join(cdir, f"v{v:010d}.json")) as f:
-            return v, json.load(f)["buckets"]
+            m = json.load(f)
+        n = m.get("n_buckets") or self._table_buckets(table_dir)
+        return v, m["buckets"], n
 
     def _try_commit(
-        self, table_dir: str, version: int, buckets_map: dict[str, str]
+        self, table_dir: str, version: int, buckets_map: dict[str, str],
+        n_buckets: int,
     ) -> bool:
         """Publish ``version`` by atomic create-or-fail: the manifest is
         fully written to a temp file first, then hard-linked to its final
@@ -186,7 +201,8 @@ class GraphStore:
         os.makedirs(cdir, exist_ok=True)
         tmp = os.path.join(cdir, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
-            json.dump({"version": version, "buckets": buckets_map}, f)
+            json.dump({"version": version, "n_buckets": n_buckets,
+                       "buckets": buckets_map}, f)
         try:
             os.link(tmp, os.path.join(cdir, f"v{version:010d}.json"))
             return True
@@ -272,7 +288,6 @@ class GraphStore:
         table_dir: str,
         incoming: DataFrame,
         bucket_cols: list[str],
-        n: int,
         build,
         indexes: list[IndexConfig] | None = None,
         max_retries: int = 10,
@@ -283,36 +298,57 @@ class GraphStore:
         ``data/<commit-id>/`` dir, and publish version+1. On a lost race
         the orphan data dir is discarded and the merge re-runs against the
         winner's state — concurrent writers to disjoint OR overlapping
-        buckets serialize; neither's rows are lost."""
-        import time
+        buckets serialize; neither's rows are lost.
 
-        # touched buckets are a pure function of the incoming batch —
-        # computed once, valid across retries. Bounded by n_buckets.
-        touched = [
-            r[0]
-            for r in incoming.select(
-                self._bucket_expr(bucket_cols, n).alias(BUCKET_COL)
-            )
-            .distinct()
-            .collect()
-        ]
+        Sizing (module docstring): an incoming row is priced at Spark's
+        schema width estimate, committed rows at their bytes on disk, so
+        a misestimate at birth is corrected by the next commit's growth
+        check."""
+        width = incoming._jdf.schema().defaultSize()
+        probes: dict[int, dict[int, int]] = {}
+
+        def rows_by_bucket(n: int) -> dict[int, int]:
+            # incoming rows per bucket under count n: one job per count
+            # this writer meets (a retry against a re-bucketed table
+            # re-probes). Under n=1 it is the batch's row count.
+            if n not in probes:
+                probes[n] = {
+                    r[0]: r[1]
+                    for r in incoming.groupBy(
+                        self._bucket_expr(bucket_cols, n).alias(BUCKET_COL)
+                    ).count().collect()
+                }
+            return probes[n]
+
         for attempt in range(max_retries):
-            version, manifest = self._current_manifest(table_dir)
+            version, manifest, n = self._current_commit(table_dir)
             legacy_untouched: dict[str, str] = {}
             migrated_snapshot = False
             if manifest:
-                existing = self._manifest_read(table_dir, manifest, only=touched)
-                base_map = {
-                    b: rel for b, rel in manifest.items()
-                    if b not in {str(t) for t in touched}
-                }
+                touched = rows_by_bucket(n)
+                grown = self._grown_buckets(table_dir, manifest, touched, width, n)
+                if grown:
+                    # re-bucket: merge against the whole table, every
+                    # output bucket lands in this commit's data dir
+                    n = grown
+                    existing = self._manifest_read(table_dir, manifest)
+                    base_map = {}
+                else:
+                    existing = self._manifest_read(
+                        table_dir, manifest, only=list(touched))
+                    base_map = {
+                        b: rel for b, rel in manifest.items()
+                        if int(b) not in touched
+                    }
             elif os.path.exists(
                 os.path.join(self._buckets_dir(table_dir), "_SUCCESS")
             ):
                 # legacy bucketed layout: merge against its pruned read and
                 # reference its untouched bucket dirs in-place in v1 —
                 # upgrade without rewriting the table
-                existing = self._read_buckets(table_dir, only=touched)
+                n = self._table_buckets(table_dir)
+                touched = rows_by_bucket(n)
+                existing = self._read_buckets(table_dir, only=list(touched))
                 prefix = f"{BUCKET_COL}="
                 for entry in os.listdir(self._buckets_dir(table_dir)):
                     if entry.startswith(prefix):
@@ -322,37 +358,25 @@ class GraphStore:
                 base_map = dict(legacy_untouched)
             else:
                 legacy = self._latest_snapshot(table_dir)
-                # full-snapshot migration: merge against the whole table;
-                # every output bucket lands in this commit's data dir
+                # first commit or full-snapshot migration: merge against
+                # the whole table; every output bucket lands in this
+                # commit's data dir
                 existing = (
                     self.spark.read.parquet(legacy) if legacy is not None else None
                 )
+                n = self.n_buckets or _fit_buckets(
+                    (self._dir_bytes(legacy) if legacy is not None else 0)
+                    + width * sum(rows_by_bucket(1).values()))
                 base_map = {}
                 migrated_snapshot = legacy is not None
             merged = build(existing)
             out = merged.withColumn(
                 BUCKET_COL, self._bucket_expr(bucket_cols, n)
             )
-            # one shuffle partition per touched bucket -> one file per
-            # bucket, not one-per-bucket-per-task (small-files at scale);
-            # the index sort must come after this shuffle
-            out = out.repartition(F.col(BUCKET_COL))
-            if indexes:
-                out = self._apply_index_layout(out, indexes)
-            commit_id = uuid.uuid4().hex
-            staging = os.path.join(table_dir, f".staging-{commit_id}")
-            out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-            os.makedirs(self._data_dir(table_dir), exist_ok=True)
-            commit_data = os.path.join(self._data_dir(table_dir), commit_id)
-            written = [
-                e for e in os.listdir(staging) if e.startswith(f"{BUCKET_COL}=")
-            ]
-            shutil.move(staging, commit_data)
-            new_map = dict(base_map)
-            for entry in written:
-                b = entry.split("=", 1)[1]
-                new_map[b] = os.path.join("data", commit_id, entry)
-            if self._try_commit(table_dir, version + 1, new_map):
+            commit_data, written = self._write_buckets(table_dir, out, indexes)
+            if self._try_commit(
+                table_dir, version + 1, {**base_map, **written}, n
+            ):
                 if migrated_snapshot:
                     # superseded full snapshot: its rows now live in this
                     # commit's data dir (the staging write completed before
@@ -368,6 +392,51 @@ class GraphStore:
         raise RuntimeError(
             f"commit contention on {table_dir}: lost {max_retries} races"
         )
+
+    def _grown_buckets(
+        self, table_dir: str, manifest: dict[str, str],
+        touched: dict[int, int], width: int, n: int,
+    ) -> int | None:
+        """The count to re-bucket at when merging ``touched`` (incoming
+        rows per bucket, ``width`` bytes each) would leave a bucket above
+        twice TARGET_BUCKET_BYTES; None when the table keeps ``n``."""
+        def on_disk(b) -> int:
+            rel = manifest.get(str(b))
+            return self._dir_bytes(os.path.join(table_dir, rel)) if rel else 0
+
+        worst = max(
+            (on_disk(b) + width * rows for b, rows in touched.items()),
+            default=0)
+        if worst <= 2 * TARGET_BUCKET_BYTES:
+            return None
+        total = sum(on_disk(b) for b in manifest) + width * sum(touched.values())
+        return _fit_buckets(total, 2 * n)
+
+    def _write_buckets(
+        self, table_dir: str, out: DataFrame,
+        indexes: list[IndexConfig] | None,
+    ) -> tuple[str, dict[str, str]]:
+        """Write ``out`` (carrying BUCKET_COL) as a fresh immutable commit
+        data dir; returns (that dir, {bucket_id: table-relative dir})."""
+        # one shuffle partition per bucket -> one file per bucket, not
+        # one-per-bucket-per-task (small-files at scale); the index sort
+        # must come after this shuffle
+        out = out.repartition(F.col(BUCKET_COL))
+        if indexes:
+            out = self._apply_index_layout(out, indexes)
+        commit_id = uuid.uuid4().hex
+        staging = os.path.join(table_dir, f".staging-{commit_id}")
+        out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
+        os.makedirs(self._data_dir(table_dir), exist_ok=True)
+        commit_data = os.path.join(self._data_dir(table_dir), commit_id)
+        written = [
+            e for e in os.listdir(staging) if e.startswith(f"{BUCKET_COL}=")
+        ]
+        shutil.move(staging, commit_data)
+        return commit_data, {
+            e.split("=", 1)[1]: os.path.join("data", commit_id, e)
+            for e in written
+        }
 
     def _latest_snapshot(self, table_dir: str) -> str | None:
         snaps = os.path.join(table_dir, "snapshots")
@@ -568,7 +637,6 @@ class GraphStore:
                 "identity field present")
         identity = list(declared)
         table_dir = self._table_dir("vertices", name)
-        n = self._record_buckets(table_dir)
         # identity-less tables bucket on the full row hash: duplicates still
         # collide in one bucket, so per-bucket dedup == global dedup.
         # sorted() + xxhash64's skip-nulls make the bucket stable when later
@@ -601,7 +669,7 @@ class GraphStore:
             return merged.drop("__gen") if "__gen" in merged.columns else merged
 
         self._merge_commit(
-            table_dir, df, bucket_cols, n, build,
+            table_dir, df, bucket_cols, build,
             indexes=self._vertex_indexes(name),
         )
 
@@ -615,7 +683,6 @@ class GraphStore:
             df.explain()
             return
         table_dir = self._table_dir("edges", eid.table_name())
-        n = self._record_buckets(table_dir)
         key_cols = [c for c in df.columns if c.startswith(("_src_", "_dst_"))]
         if "_relation" in df.columns:
             key_cols.append("_relation")
@@ -694,7 +761,7 @@ class GraphStore:
             return merged
 
         self._merge_commit(
-            table_dir, df, bucket_cols, n, build,
+            table_dir, df, bucket_cols, build,
             indexes=edge.indexes if edge is not None else None,
         )
 
@@ -893,45 +960,33 @@ class GraphStore:
         data dir holds every bucket — the small-files defense: a long run
         of incremental upserts leaves each bucket's rows scattered across
         that many commit dirs' files, and scans pay per-file open costs.
+        The bucket count is re-sized from the table's bytes on disk, so a
+        table that was written with more buckets than it needs shrinks.
         Published through the same optimistic protocol as any write
         (concurrent upserts serialize against it); after the old versions
         expire, the superseded fragments are garbage-collected."""
         table_dir = self._table_dir(kind, name)
-        n = self._table_buckets(table_dir)
-        import time
-
+        if kind == "vertices":
+            indexes = self._vertex_indexes(name)
+        else:
+            indexes = next(
+                (e.indexes for e in self.schema.edges
+                 if e.edge_id.table_name() == name), None)
         for attempt in range(10):
             version, manifest = self._current_manifest(table_dir)
             if not manifest:
                 return  # nothing committed yet (legacy layouts compact on
                 # first upsert instead)
+            n = _fit_buckets(sum(
+                self._dir_bytes(os.path.join(table_dir, rel))
+                for rel in manifest.values()))
             df = self._manifest_read(table_dir, manifest)
             out = df.withColumn(
                 BUCKET_COL,
                 self._bucket_expr(self._bucket_cols_of(table_dir, df), n),
-            ).repartition(F.col(BUCKET_COL))
-            if kind == "vertices":
-                indexes = self._vertex_indexes(name)
-            else:
-                indexes = next(
-                    (e.indexes for e in self.schema.edges
-                     if e.edge_id.table_name() == name), None)
-            if indexes:
-                out = self._apply_index_layout(out, indexes)
-            commit_id = uuid.uuid4().hex
-            staging = os.path.join(table_dir, f".staging-{commit_id}")
-            out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-            os.makedirs(self._data_dir(table_dir), exist_ok=True)
-            commit_data = os.path.join(self._data_dir(table_dir), commit_id)
-            written = [
-                e for e in os.listdir(staging) if e.startswith(f"{BUCKET_COL}=")
-            ]
-            shutil.move(staging, commit_data)
-            new_map = {
-                e.split("=", 1)[1]: os.path.join("data", commit_id, e)
-                for e in written
-            }
-            if self._try_commit(table_dir, version + 1, new_map):
+            )
+            commit_data, written = self._write_buckets(table_dir, out, indexes)
+            if self._try_commit(table_dir, version + 1, written, n):
                 self._gc_table(table_dir)
                 return
             shutil.rmtree(commit_data, ignore_errors=True)

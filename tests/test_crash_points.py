@@ -86,7 +86,8 @@ def _sweep(tmp_path, build, op, retry, read):
     is the operation under test; ``retry(path)`` re-runs it from a FRESH
     handle (the post-crash restart); ``read(path)`` returns the canonical
     reader-visible state from a fresh handle. Returns the number of kill
-    points AVAILABLE (>= 1 asserts the op actually mutates).
+    points AVAILABLE (>= 1 asserts the op actually mutates). Every
+    sampled kill point must actually fire.
 
     Depth (r15, driver-budget fix): each kill point costs a full store
     rebuild + op + two reads (~10 s of Spark actions), so the two compact
@@ -124,20 +125,22 @@ def _sweep(tmp_path, build, op, retry, read):
             killer.kill_at = n
             try:
                 op(h)
-                killed = False
             except KillPoint:
-                killed = True
+                pass
+        # every sampled point must fire: a run that never reaches mutation
+        # n means the op's mutation sequence drifted from the counting
+        # run, and the sweep would silently thin out
+        assert killer.count >= n, (
+            f"kill point {n} never fired: the op made only {killer.count} "
+            f"filesystem mutations, the counting run {total}")
         seen = read(path)  # fresh reader over the crashed layout
         assert seen == old or seen == new, (
             f"kill at mutation {n}: torn state — reader saw neither the "
             f"old nor the new version")
-        if killed:
-            retry(path)
-            assert read(path) == new, (
-                f"kill at mutation {n}: retry did not converge to the "
-                f"committed new state")
-        else:
-            assert seen == new, f"un-killed run at n={n} did not commit"
+        retry(path)
+        assert read(path) == new, (
+            f"kill at mutation {n}: retry did not converge to the "
+            f"committed new state")
 
     # un-killed commit check on a fresh build (the exhaustive loop's
     # terminating iteration, preserved under sampling)
@@ -208,6 +211,27 @@ def test_crash_sweep_graph_edge_insert(spark, tmp_path):
                lambda p: op(GraphStore(spark, p, _SCHEMA)),
                lambda p: _gread(spark, p))
     assert n >= 2
+
+
+def test_crash_sweep_graph_rebucket(spark, tmp_path, monkeypatch):
+    """A growth commit re-buckets the WHOLE table under a new count in
+    one manifest: every kill leaves the old one-bucket table or the new
+    layout, and the retry converges."""
+    from graflo_spark import store as store_mod
+
+    monkeypatch.setattr(store_mod, "TARGET_BUCKET_BYTES", 4096)
+    batch = [(i, f"n{i}") for i in range(2, 400)]
+
+    def op(store):
+        store.upsert_vertices("person", spark.createDataFrame(
+            batch, "pid int, nm string"))
+
+    n = _sweep(tmp_path, lambda p: _gbuild(spark, p), op,
+               lambda p: op(GraphStore(spark, p, _SCHEMA)),
+               lambda p: _gread(spark, p))
+    assert n >= 2
+    ref = GraphStore(spark, str(tmp_path / "ref"), _SCHEMA)
+    assert ref._current_commit(ref._table_dir("vertices", "person"))[2] > 1
 
 
 # ----------------------------------------------------------- PackingStore
