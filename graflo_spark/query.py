@@ -4,20 +4,27 @@ Reference: graflo/architecture/query/models.py (typed, cap-validated query
 models — deliberately no raw query pass-through) + db/traversal.py
 (backend-neutral BFS). Spark design: a :class:`GraphView` of vertex/edge
 DataFrames; traversal is an iterative frontier-join BFS with a visited
-anti-join — each hop is one join against a unioned, type-erased edge list.
+anti-join — each hop joins each vertex type's frontier against the
+per-edge-type projections leaving that type.
 
-Scale notes: the edge list is built once per traversal (union of per-type
-projections — column-pruned to the two endpoint keys); the frontier is tiny
-relative to the graph, so AQE turns every hop into a broadcast join; the
-visited set stays a DataFrame (no driver collect).
+Scale notes: an edge type's projection (column-pruned to the endpoint
+keys) is built at most once per traversal, the first time a frontier
+reaches its source type, so unreached edge types cost no plan. Every hop
+except the last is eagerly checkpointed, and each frontier's exact row
+count comes from its checkpoint's own job (an Observation), not a second
+action; the last hop, which nothing probes, runs inside the job that
+materializes the result. The frontier is tiny relative to the graph, so
+it is broadcast (up to ``BROADCAST_FRONTIER_MAX_ROWS``); the visited set
+stays a DataFrame (no driver collect).
 """
 
 from __future__ import annotations
 
 import enum
 from dataclasses import dataclass, field as dc_field
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graflo_spark.filters import FilterExpression
@@ -44,6 +51,18 @@ class AggFn(str, enum.Enum):
     MIN = "min"
     AVERAGE = "average"
     SORTED_UNIQUE = "sorted_unique"
+
+
+class _AdjEntry(NamedTuple):
+    """One traversal orientation of an edge table: a frontier in ``src``
+    (``(vertex type, identity space)``) reaches ``dst`` by joining its keys
+    to the edge columns ``a_cols``; ``b_cols`` are the reached keys."""
+
+    eid: EdgeId
+    src: tuple[str, str]
+    dst: tuple[str, str]
+    a_cols: tuple[str, ...]
+    b_cols: tuple[str, ...]
 
 
 @dataclass
@@ -463,46 +482,81 @@ class GraphView:
         from graflo_spark.ops.graphalgo import _RoundCheckpointer
 
         adjacency = self._adjacency(relations, direction)
+        # projections are built on first use: an edge type no frontier
+        # reaches (and its _with_canon resolution) never costs a plan
+        canon: dict[EdgeId, DataFrame] = {}
+        projections: dict[_AdjEntry, DataFrame] = {}
+
+        def projection(e: _AdjEntry) -> DataFrame:
+            if e not in projections:
+                if e.eid not in canon:
+                    canon[e.eid] = self._adjacency_frame(e.eid, relations)
+                projections[e] = canon[e.eid].select(
+                    *[F.col(c).alias(f"a_{i}") for i, c in enumerate(e.a_cols)],
+                    *[F.col(c).alias(f"b_{i}") for i, c in enumerate(e.b_cols)],
+                )
+            return projections[e]
+
+        def record_plan(label: str, ran: DataFrame) -> None:
+            # ``ran`` was just EXECUTED, so its query execution holds the
+            # FINAL adaptive plan (AQE's actual join choice), which the
+            # checkpointed frame's own plan (a scan of cached partitions)
+            # hides
+            if plan_sink is not None:
+                mode = (ran.sparkSession._jvm.org.apache.spark.sql.execution
+                        .ExplainMode.fromString("formatted"))
+                plan_sink.append(f"-- {label}\n" + ran._jdf.queryExecution()
+                                 .explainString(mode))
+
         # keep=None: the RESULT unions every hop's checkpointed frame, so
-        # no generation may be freed mid-run; ck.finish materializes the
-        # merged output and then reclaims them all — one bounded block
-        # survives the traversal instead of seeds + one per (hop, type).
+        # no generation may be freed mid-run; ck.finish runs the merged
+        # output — the last hop's joins included — and then reclaims them
+        # all: one bounded block survives the traversal instead of seeds +
+        # one per (hop, type).
         spark = next(iter(initial.values())).sparkSession
         with _RoundCheckpointer(spark, keep=None) as ck:
-            initial = {
-                t: ck(df, f"seed:{t[0]}:{t[1] or 'primary'}")
-                for t, df in initial.items()
-            }
-            visited: dict[tuple[str, str], DataFrame] = {
-                t: df.withColumn("hop", F.lit(0)) for t, df in initial.items()
-            }
-            frontier: dict[tuple[str, str], DataFrame] = dict(initial)
-            # Frontiers are eagerly checkpointed, so an exact count is
-            # nearly free — broadcast the probe side only while it is
-            # provably small. A multi-hop frontier on a dense graph can
-            # approach all vertices; a FORCED broadcast there OOMs
-            # executors at scale, so past the threshold the hint is
-            # dropped and AQE picks the join strategy from the
-            # checkpoint's real stats.
-            frontier_rows: dict[tuple[str, str], int] = {
-                t: df.count() for t, df in initial.items()
-            }
-            # an empty seed space (e.g. the secondary space of a type whose
-            # rows are all primary-keyed — the common case) must not cost a
-            # join per hop
-            frontier = {t: df for t, df in frontier.items()
-                        if frontier_rows[t] > 0}
+
+            def counted(df: DataFrame, slot: str,
+                        label: str | None = None) -> tuple[DataFrame, int]:
+                """Eager checkpoint of ``df`` plus its exact row count,
+                read off the checkpoint's own job (an Observation) rather
+                than a second count() action."""
+                obs = Observation()
+                ran = df.observe(obs, F.count(F.lit(1)).alias("n"))
+                out = ck(ran, slot)
+                if label is not None:
+                    record_plan(label, ran)
+                return out, obs.get["n"]
+
+            visited: dict[tuple[str, str], DataFrame] = {}
+            frontier: dict[tuple[str, str], DataFrame] = {}
+            # every probed frontier is checkpointed and counted, so
+            # broadcast the probe side only while it is provably small. A
+            # multi-hop frontier on a dense graph can approach all
+            # vertices; a FORCED broadcast there OOMs executors at scale,
+            # so past the threshold the hint is dropped and AQE picks the
+            # join strategy from the checkpoint's real stats.
+            frontier_rows: dict[tuple[str, str], int] = {}
+            last_hop: list[str] = []  # plan_sink labels ck.finish runs
+            for t, df in initial.items():
+                df, cnt = counted(df, f"seed:{t[0]}:{t[1] or 'primary'}")
+                visited[t] = df.withColumn("hop", F.lit(0))
+                # an empty seed space (e.g. the secondary space of a type
+                # whose rows are all primary-keyed — the common case) must
+                # not cost a join per hop
+                if cnt > 0:
+                    frontier[t] = df
+                    frontier_rows[t] = cnt
             for h in range(1, hops + 1):
                 reached: dict[tuple[str, str], DataFrame] = {}
-                for src_t, dst_t, adj_df, n_dst in adjacency:
-                    if src_t not in frontier:
+                for e in adjacency:
+                    if e.src not in frontier:
                         continue
-                    fr = frontier[src_t]
-                    n_src = len(fr.columns)
-                    probe = fr.select(*[
+                    n_src, n_dst = len(e.a_cols), len(e.b_cols)
+                    probe = frontier[e.src].select(*[
                         F.col(f"k_{i}").alias(f"p_{i}") for i in range(n_src)
                     ])
-                    if frontier_rows.get(src_t, 0) <= BROADCAST_FRONTIER_MAX_ROWS:
+                    if frontier_rows[e.src] <= BROADCAST_FRONTIER_MAX_ROWS:
                         probe = F.broadcast(probe)
                     # NULL-SAFE equi-join (still an equi-join for the
                     # planner — EqualNullSafe extracts as a hash join key):
@@ -518,7 +572,7 @@ class GraphView:
                     for i in range(1, n_dst):
                         keep = keep | F.col(f"b_{i}").isNotNull()
                     nxt = (
-                        adj_df.join(probe, cond)
+                        projection(e).join(probe, cond)
                         # an ALL-null endpoint key is not an addressable
                         # node (the degenerate fallback address); partial
                         # nulls stay — the null-safe visited anti-join
@@ -529,8 +583,9 @@ class GraphView:
                         ])
                         .dropDuplicates()
                     )
-                    reached[dst_t] = (
-                        reached[dst_t].unionByName(nxt) if dst_t in reached else nxt
+                    reached[e.dst] = (
+                        reached[e.dst].unionByName(nxt) if e.dst in reached
+                        else nxt
                     )
                 frontier = {}
                 frontier_rows = {}
@@ -550,27 +605,22 @@ class GraphView:
                             anti = anti & F.col(f"k_{i}").eqNullSafe(
                                 F.col(f"v_{i}"))
                         new = new.join(seen, anti, "left_anti")
-                    # materialize per hop: keeps lineage short and lets AQE size
-                    # the next hop's join from real stats
-                    pre_ckpt = new
-                    new = ck(new, f"hop:{t[0]}:{t[1] or 'primary'}")
-                    if plan_sink is not None:
-                        # the eager checkpoint just EXECUTED pre_ckpt's plan, so
-                        # its query execution now holds the FINAL adaptive plan
-                        # (AQE's actual join choice), which the checkpointed
-                        # frame's own plan (a scan of cached partitions) hides
-                        plan_sink.append(
-                            f"-- hop {h} -> {t[0]}:{t[1] or 'primary'}\n"
-                            + pre_ckpt._jdf.queryExecution().explainString(
-                                pre_ckpt.sparkSession._jvm.org.apache.spark.sql
-                                .execution.ExplainMode.fromString("formatted")
-                            )
-                        )
-                    cnt = new.count()
-                    if cnt == 0:
-                        continue
-                    frontier[t] = new
-                    frontier_rows[t] = cnt
+                    label = f"hop {h} -> {t[0]}:{t[1] or 'primary'}"
+                    if h < hops:
+                        # a frontier the next hop probes: checkpoint it —
+                        # short lineage, and AQE sizes the next hop's join
+                        # from real stats
+                        new, cnt = counted(
+                            new, f"hop:{t[0]}:{t[1] or 'primary'}", label)
+                        if cnt == 0:
+                            continue
+                        frontier[t] = new
+                        frontier_rows[t] = cnt
+                    else:
+                        # the last hop stays lazy: nothing probes it, so
+                        # it runs once, inside ck.finish (an empty one
+                        # adds no rows)
+                        last_hop.append(label)
                     keyed = new.withColumn("hop", F.lit(h))
                     visited[t] = (
                         visited[t].unionByName(keyed) if t in visited else keyed
@@ -602,38 +652,49 @@ class GraphView:
             merged = outs[0]
             for o in outs[1:]:
                 merged = merged.unionByName(o)
-            return ck.finish(merged)
+            out = ck.finish(merged)
+            for label in last_hop:
+                record_plan(label, merged)
+            return out
 
     def _adjacency(
         self,
         relations: list[str] | None,
         direction: Direction,
-    ) -> list[tuple[tuple[str, str], tuple[str, str], DataFrame, int]]:
-        """Per-edge-type adjacency projections for the typed BFS: each entry
-        is ``((src_type, src_space), (dst_type, dst_space),
-        df[a_0..a_m, b_0..b_n], n_dst_keys)`` in traversal orientation
-        (reversed entries added per direction / undirected semantics,
-        matching :meth:`typed_edge_list`).
+    ) -> list[_AdjEntry]:
+        """Per-edge-type traversal orientations for the typed BFS — plan
+        METADATA only; :meth:`_bfs` builds an entry's
+        ``df[a_0..a_m, b_0..b_n]`` projection (from
+        :meth:`_adjacency_frame`) the first time a frontier reaches its
+        source. Reversed entries are added per direction / undirected
+        semantics, matching :meth:`typed_edge_list`.
 
         For an edge table carrying only the primary identity key columns —
         every table the ingest pipeline writes — this is exactly one entry
         per orientation with no added filter: the pre-funnel plan, native
         identity key columns, space ``""``. A MULTI-space endpoint type (a
         store that went through identity-changing migrations) uses the
-        canonical addressing instead: the side's endpoint keys are
-        resolved through :meth:`_with_canon` (per-space lookup against
-        the vertex table → the addressed vertex's winner key) and the
-        side becomes ONE entry in canonical string space ``"@"`` — no
-        per-space fan-out, and edges keyed in an older space than their
-        endpoint's current winner still traverse (r14 fuzz, seed 1201)."""
-        out: list[tuple[tuple[str, str], tuple[str, str], DataFrame, int]] = []
+        canonical addressing instead: the side's key is the canonical
+        string column :meth:`_adjacency_frame` resolves through
+        :meth:`_with_canon`, and the side becomes ONE entry in canonical
+        space ``"@"`` — no per-space fan-out, and edges keyed in an older
+        space than their endpoint's current winner still traverse (r14
+        fuzz, seed 1201)."""
+        def side(vname, prefix):
+            """((type, space), key column names): native identity columns
+            for a single-space type; the canonical string key (space "@")
+            for a multi-space type."""
+            if self._multi_space(vname):
+                return (vname, "@"), (f"__{prefix}canon",)
+            fields = self.schema.vertex(vname).identity_fields
+            return (vname, ""), tuple(f"{prefix}{f}" for f in fields)
+
+        out: list[_AdjEntry] = []
         for eid, df in self.edges.items():
-            if "_relation" in df.columns:
-                if relations is not None:
-                    df = df.filter(F.col("_relation").isin(relations))
-            elif relations is not None and eid.relation not in relations:
-                continue
             cols = set(df.columns)
+            if ("_relation" not in cols and relations is not None
+                    and eid.relation not in relations):
+                continue
             for vname, prefix in ((eid.source, "_src_"),
                                   (eid.target, "_dst_")):
                 present = [
@@ -649,45 +710,30 @@ class GraphView:
                 ).directed
             except KeyError:
                 directed = True
-
-            def side(vname, prefix, df=df):
-                """(space_label, key_col_names, prepared_df_cols) — native
-                identity columns for a single-space type; the canonical
-                string key (space label "@") for a multi-space type."""
-                if self._multi_space(vname):
-                    return "@", [f"__{prefix}canon"]
-                fields = self.schema.vertex(vname).identity_fields
-                return "", [f"{prefix}{f}" for f in fields]
-
-            src_space, src_cols = side(eid.source, "_src_")
-            dst_space, dst_cols = side(eid.target, "_dst_")
-            work = df
-            if src_space == "@":
-                work = self._with_canon(work, eid.source, "_src_",
-                                        "___src_canon")
-            if dst_space == "@":
-                work = self._with_canon(work, eid.target, "_dst_",
-                                        "___dst_canon")
-
-            def proj(a_cols, b_cols, work=work):
-                return work.select(
-                    *[F.col(c).alias(f"a_{i}")
-                      for i, c in enumerate(a_cols)],
-                    *[F.col(c).alias(f"b_{i}")
-                      for i, c in enumerate(b_cols)],
-                )
-
-            fwd = direction in (Direction.OUT, Direction.ANY) or not directed
-            rev = direction in (Direction.IN, Direction.ANY) or not directed
-            if fwd:
-                out.append(((eid.source, src_space), (eid.target, dst_space),
-                            proj(src_cols, dst_cols), len(dst_cols)))
-            if rev:
-                out.append(((eid.target, dst_space), (eid.source, src_space),
-                            proj(dst_cols, src_cols), len(src_cols)))
+            src, src_cols = side(eid.source, "_src_")
+            dst, dst_cols = side(eid.target, "_dst_")
+            if direction in (Direction.OUT, Direction.ANY) or not directed:
+                out.append(_AdjEntry(eid, src, dst, src_cols, dst_cols))
+            if direction in (Direction.IN, Direction.ANY) or not directed:
+                out.append(_AdjEntry(eid, dst, src, dst_cols, src_cols))
         if not out:
             raise ValueError("graph has no edges")
         return out
+
+    def _adjacency_frame(self, eid: EdgeId,
+                         relations: list[str] | None) -> DataFrame:
+        """Edge table ``eid`` as the BFS reads it: filtered to
+        ``relations`` when it carries a ``_relation`` column, and each
+        multi-space endpoint side's canonical key resolved into
+        ``___src_canon`` / ``___dst_canon`` (the :class:`_AdjEntry` key
+        columns of space ``"@"``)."""
+        df = self.edges[eid]
+        if "_relation" in df.columns and relations is not None:
+            df = df.filter(F.col("_relation").isin(relations))
+        for vname, prefix in ((eid.source, "_src_"), (eid.target, "_dst_")):
+            if self._multi_space(vname):
+                df = self._with_canon(df, vname, prefix, f"__{prefix}canon")
+        return df
 
     def traverse(
         self,
@@ -715,10 +761,9 @@ class GraphView:
         initial: dict[tuple[str, str], DataFrame] = {}
         for v, cond in by_type.items():
             initial.update(self._seed_frontiers(v, cond))
-        out = self._bfs(initial, hops, direction, relations)
-        # min() is a no-op on the BFS output (one row per node) but keeps
-        # the merged-result contract explicit
-        return out.groupBy("node_key", "node_type").agg(F.min("hop").alias("hop"))
+        # _bfs already emits one row per node at its minimal hop: the
+        # merged-result contract needs no aggregate
+        return self._bfs(initial, hops, direction, relations)
 
     def _algo_edges(self, relations: list[str] | None) -> DataFrame:
         """The (id_a, id_b) edge projection every graph-algorithm wrapper

@@ -891,9 +891,252 @@ def test_single_space_funnel_compiles_to_plain_concat_plan(spark):
     assert "CASE WHEN" not in plan and "concat_ws" in plan
     # adjacency: exactly one entry per orientation, primary space only
     adj = view._adjacency(None, Direction.OUT)
-    assert [(a, b) for a, b, _, _ in adj] == [(("n", ""), ("n", ""))]
+    assert [(e.src, e.dst) for e in adj] == [(("n", ""), ("n", ""))]
     # and the secondary-space machinery kicks in ONLY when both the
     # schema declares a space and the edge table carries its columns
     schema.vertex("n").secondary_identities["alt"] = ["id"]
     adj2 = view._adjacency(None, Direction.OUT)   # no _src_alt columns
-    assert [(a, b) for a, b, _, _ in adj2] == [(("n", ""), ("n", ""))]
+    assert [(e.src, e.dst) for e in adj2] == [(("n", ""), ("n", ""))]
+
+
+# --------------------------------------------------- typed BFS: small graphs
+
+def _local_frame(spark, rows, ddl):
+    """An in-memory frame planned as a LocalRelation: scanning it starts
+    no Python worker, unlike ``createDataFrame`` over a list."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    pdf = pd.DataFrame(rows, columns=schema.names).astype("Int64")
+    return spark.createDataFrame(pdf, schema)
+
+
+def _typed_view(spark, persons, knows, friend, works, uses, sites):
+    """GraphView over persons ``p`` (``knows`` directed, ``friend``
+    undirected), companies ``c`` keyed by two fields ``(cc, cn)`` and
+    MULTI-SPACE sites ``s`` (primary ``sid``, secondary ``alt``): a site
+    row or a ``uses`` endpoint may carry only ``alt``."""
+    from graflo_spark.manifest import CoreSchema, Edge, Field, Vertex
+    from graflo_spark.query import GraphView
+
+    schema = CoreSchema(
+        vertices=[
+            Vertex("p", [Field("id")], identity=["id"]),
+            Vertex("c", [Field("cc"), Field("cn")], identity=["cc", "cn"]),
+            Vertex("s", [Field("sid"), Field("alt")], identity=["sid"],
+                   secondary_identities={"alt": ["alt"]}),
+        ],
+        edges=[Edge("p", "p", relation="knows"),
+               Edge("p", "p", relation="friend", directed=False),
+               Edge("p", "c", relation="works_at"),
+               Edge("c", "s", relation="uses")],
+    )
+    companies = sorted({(cc, cn) for _, cc, cn in works}
+                       | {(cc, cn) for cc, cn, _, _ in uses})
+    return GraphView(
+        vertices={
+            "p": _local_frame(spark, [(i,) for i in persons], "id long"),
+            "c": _local_frame(spark, companies, "cc long, cn long"),
+            "s": _local_frame(spark, sites, "sid long, alt long"),
+        },
+        edges={
+            EdgeId("p", "p", "knows"): _local_frame(
+                spark, knows, "_src_id long, _dst_id long"),
+            EdgeId("p", "p", "friend"): _local_frame(
+                spark, friend, "_src_id long, _dst_id long"),
+            EdgeId("p", "c", "works_at"): _local_frame(
+                spark, works, "_src_id long, _dst_cc long, _dst_cn long"),
+            EdgeId("c", "s", "uses"): _local_frame(
+                spark, uses, "_src_cc long, _src_cn long, _dst_sid long, "
+                             "_dst_alt long"),
+        },
+        schema=schema,
+    )
+
+
+def _random_typed_graph(seed):
+    """Seeded random arguments for :func:`_typed_view`. Persons 100 -> 101
+    are an isolated chain; sites 4 and 5 carry only ``alt``; about a third
+    of the ``uses`` endpoints whose site has a primary key still address
+    it through ``alt``."""
+    import random
+
+    rng = random.Random(seed)
+    persons = list(range(10)) + [100, 101]
+    sites = [(i, 50 + i) for i in range(4)] + [(None, 54), (None, 55)]
+    companies = [(k % 2, k) for k in range(4)]
+    knows = [tuple(rng.sample(range(10), 2)) for _ in range(8)] + [(100, 101)]
+    friend = [tuple(rng.sample(range(10), 2)) for _ in range(3)]
+    works = [(rng.randrange(10), *rng.choice(companies)) for _ in range(6)]
+    uses = []
+    for _ in range(6):
+        sid, alt = rng.choice(sites)
+        if sid is not None and rng.random() < 0.33:
+            sid = None
+        uses.append((*rng.choice(companies), sid, alt))
+    return dict(persons=persons, knows=knows, friend=friend, works=works,
+                uses=uses, sites=sites)
+
+
+def _reference_bfs(g, seeds, hops, direction):
+    """Pure-Python min-hop BFS over :func:`_typed_view`'s edges, in the
+    view's node_key addressing: ``{node_key: hop}``."""
+    from graflo_spark.query import Direction
+
+    def site(sid, alt):
+        return f"s\x1f{sid}" if sid is not None else f"s\x1f#alt\x1f{alt}"
+
+    by_sid = {sid: site(sid, alt) for sid, alt in g["sites"] if sid is not None}
+    by_alt = {alt: site(sid, alt) for sid, alt in g["sites"]}
+
+    def site_end(sid, alt):
+        # an edge endpoint resolves to the vertex its key addresses, in
+        # whichever space that vertex's own key wins
+        if sid is not None:
+            return by_sid.get(sid, site(sid, None))
+        return by_alt.get(alt, site(None, alt))
+
+    typed = [(True, [(f"p\x1f{a}", f"p\x1f{b}") for a, b in g["knows"]]),
+             (False, [(f"p\x1f{a}", f"p\x1f{b}") for a, b in g["friend"]]),
+             (True, [(f"p\x1f{a}", f"c\x1f{cc}\x1f{cn}")
+                     for a, cc, cn in g["works"]]),
+             (True, [(f"c\x1f{cc}\x1f{cn}", site_end(sid, alt))
+                     for cc, cn, sid, alt in g["uses"]])]
+    adj: dict[str, set[str]] = {}
+    for directed, pairs in typed:
+        for a, b in pairs:
+            if direction in (Direction.OUT, Direction.ANY) or not directed:
+                adj.setdefault(a, set()).add(b)
+            if direction in (Direction.IN, Direction.ANY) or not directed:
+                adj.setdefault(b, set()).add(a)
+    hop = {k: 0 for k in seeds}
+    frontier = set(seeds)
+    for h in range(1, hops + 1):
+        frontier = {b for a in frontier for b in adj.get(a, ())} - hop.keys()
+        if not frontier:
+            break
+        hop.update({k: h for k in frontier})
+    return hop
+
+
+@pytest.mark.parametrize("direction,graph_seed,hops,chain_hops",
+                         [("out", 11, (1, 3), 3), ("in", 12, (2, 3), 2),
+                          ("any", 13, (1, 2), 3)])
+def test_traverse_matches_python_bfs(spark, direction, graph_seed, hops,
+                                     chain_hops):
+    """traverse == a pure-Python BFS over the collected edges, per
+    direction, on a seeded random graph: 1-3 hops from person and
+    multi-space site seeds, plus the isolated chain, whose frontier
+    empties after one hop — before the last hop (3 hops) or AT it (an
+    empty last hop, 2 hops)."""
+    import random
+
+    from graflo_spark.query import Direction
+
+    direction = Direction(direction)
+    g = _random_typed_graph(graph_seed)
+    view = _typed_view(spark, **g)
+    rng = random.Random(graph_seed)
+    people = rng.sample(range(10), 2)
+    alt = rng.choice([50, 51, 54])
+    site_seed = {50: "s\x1f0", 51: "s\x1f1", 54: "s\x1f#alt\x1f54"}[alt]
+    chain = 101 if direction == Direction.IN else 100
+    cases = [
+        ([("p", {"field": "id", "op": "IN", "value": people}),
+          ("s", {"field": "alt", "op": "==", "value": alt})],
+         [f"p\x1f{i}" for i in people] + [site_seed], h)
+        for h in hops
+    ] + [([("p", {"field": "id", "op": "==", "value": chain})],
+          [f"p\x1f{chain}"], chain_hops)]
+    for seeds, keys, h in cases:
+        want = _reference_bfs(g, keys, h, direction)
+        rows = view.traverse(seeds, hops=h, direction=direction).collect()
+        got = {r["node_key"]: r["hop"] for r in rows}
+        assert len(rows) == len(got)
+        assert got == want, (seeds, h)
+    assert max(want.values()) == 1  # the chain's frontier emptied
+
+
+def test_bfs_one_row_per_node_key(spark):
+    """_bfs emits ONE row per node at its minimal hop, with no aggregate
+    after it: a seed that another type's seed also reaches, a node at two
+    hop distances, and a multi-space site addressed through both of its
+    spaces (reached again at the last hop)."""
+    from graflo_spark.query import Direction
+
+    g = dict(persons=[0, 1, 2], knows=[(0, 1), (1, 2), (0, 2)], friend=[],
+             works=[(0, 0, 0), (2, 1, 1)],
+             uses=[(0, 0, 1, 51), (0, 0, None, 51), (1, 1, None, 51)],
+             sites=[(1, 51)])
+    view = _typed_view(spark, **g)
+    initial = {
+        **view._seed_frontiers("p", F.col("id") == 0),
+        # company (0, 0) is a seed AND one hop from person 0
+        **view._seed_frontiers("c", (F.col("cc") == 0) & (F.col("cn") == 0)),
+    }
+    sink: list[str] = []
+    rows = view._bfs(initial, 3, Direction.OUT, None, plan_sink=sink).collect()
+    got = {r["node_key"]: r["hop"] for r in rows}
+    assert len(rows) == len(got)
+    assert got == {"p\x1f0": 0, "c\x1f0\x1f0": 0, "p\x1f1": 1, "p\x1f2": 1,
+                   "s\x1f1": 1, "c\x1f1\x1f1": 2}
+    # plan_sink holds every hop's final adaptive plan, the last hop's
+    # (run by the result's checkpoint) included
+    heads = [p.split("\n", 1)[0] for p in sink]
+    assert {h.split(" -> ")[0] for h in heads} == {
+        "-- hop 1", "-- hop 2", "-- hop 3"}
+    assert "-- hop 3 -> s:@" in heads
+    assert all("isFinalPlan=true" in p for p in sink)
+
+
+def test_bfs_job_count(spark):
+    """A 2-hop traverse plus a 1-hop neighbors, collected, launch at most
+    ``bound`` Spark jobs. Every probed frontier's count comes from its own
+    checkpoint job and the last hop runs inside the final checkpoint, so a
+    per-hop count() action or a last-hop checkpoint breaks the bound."""
+    from graflo_spark.query import Direction
+
+    view = _typed_view(spark, **_random_typed_graph(11))
+    sc = spark.sparkContext
+    group = "test_bfs_job_count"
+    sc.setJobGroup(group, "bfs job count")
+    try:
+        view.traverse([("p", {"field": "id", "op": "IN", "value": [0, 1]})],
+                      hops=2, direction=Direction.OUT).collect()
+        view.neighbors("p", {"field": "id", "op": "==", "value": 2},
+                       hops=1, direction=Direction.ANY).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    # 33 jobs on Spark 4.1 local mode. Bringing back the per-hop count()
+    # actions makes it 41; checkpointing the last hop makes it 40.
+    assert jobs <= 36, jobs
+
+
+def test_bfs_builds_adjacency_only_for_reached_types(spark, store):
+    """A traversal that never reaches the multi-space supplier type never
+    resolves supplier edge endpoints (_with_canon); one that does, does."""
+    from graflo_spark.query import Direction, GraphView
+
+    view = store.as_view()
+    calls = []
+    orig = GraphView._with_canon
+
+    def spy(self, df, vertex, *a, **kw):
+        calls.append(vertex)
+        return orig(self, df, vertex, *a, **kw)
+
+    GraphView._with_canon = spy
+    try:
+        view.traverse(
+            [("customer", {"field": "c_custkey", "op": "IN",
+                           "value": [1, 2]})],
+            hops=2, direction=Direction.IN).collect()
+        assert calls == []
+        view.neighbors("nation", {"field": "n_nationkey", "op": "==",
+                                  "value": 1},
+                       hops=1, direction=Direction.ANY).collect()
+        assert "supplier" in calls
+    finally:
+        GraphView._with_canon = orig

@@ -127,11 +127,14 @@ def grade(plan: str) -> list[str]:
 
 
 def traversal_hop_section(spark, sf_dir: str) -> str:
-    """Per-hop BFS join plans. The traversal checkpoints each frontier, so
-    the query's own final plan only shows the last post-checkpoint stage;
-    the hop joins — where the broadcast-vs-shuffle decision lives — execute
-    during construction. ``plan_sink`` captures each hop's FINAL adaptive
-    plan right after its eager checkpoint runs it."""
+    """Per-hop BFS join plans. The traversal checkpoints every hop except
+    the last, so those hop joins — where the broadcast-vs-shuffle decision
+    lives — execute during construction, and the last hop runs inside the
+    job that materializes the merged result (``finish``). ``plan_sink``
+    captures each hop's FINAL adaptive plan right after the job that ran
+    it: an earlier hop's from its eager checkpoint, the last hop's from the
+    ``finish`` job (the whole merged plan, once per type the hop
+    reached)."""
     from graflo_spark.catalog import star_view
     from graflo_spark.query import Direction
 
