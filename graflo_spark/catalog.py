@@ -1658,9 +1658,9 @@ def quality_clf_documents(spark, sf_dir):
     and token-budget selection. Trains the NB log-odds weights in-query
     on the deterministic ``doc_id % 5 == 0`` slice labeled by the
     corpus's ``lang`` column (en vs rest — the curated-vs-crawl shape
-    with a replayable label), then scores every document: one explode,
-    one broadcast weight join, one per-doc sum. Portable md5-60-bit
-    bucket hash so DuckDB reproduces membership bit-for-bit; logit and
+    with a replayable label), then scores every document: one Arrow
+    scoring pass, one per-doc merge. Portable md5-60-bit bucket hash so
+    DuckDB reproduces membership bit-for-bit; logit and
     sigmoid rounded to 6dp (lm_cross_entropy precedent)."""
     from graflo_spark.ops import quality_clf as qc
 
@@ -1668,7 +1668,7 @@ def quality_clf_documents(spark, sf_dir):
     model = qc.train_quality_classifier(
         df.filter(F.col("doc_id") % _QCLF_TRAIN_MOD == 0),
         "doc_id", "text", F.col("lang") == "en",
-        n_bins=_QCLF_BINS, portable_hash=True)
+        n_bins=_QCLF_BINS)
     out = qc.quality_scores(df, "doc_id", "text", model)
     return out.select(
         F.col("id").cast("long").alias("id"),
@@ -1733,7 +1733,7 @@ def _dsir_scored(spark, sf_dir):
     raw = df.filter(F.col("doc_id") % 7 == 1)
     return qc.dsir_importance(
         df, "doc_id", "text", target, raw,
-        n_bins=_QCLF_BINS, portable_hash=True)
+        n_bins=_QCLF_BINS)
 
 
 # BPE encode replay: the merge table below was trained ONCE at sf0.01
@@ -2067,12 +2067,12 @@ def dup_substring_spans_documents(spark, sf_dir):
     """Exact repeated-substring spans, Lee et al. 2022 style
     (ops/dedup.duplicated_substring_spans): every maximal token span
     covered by a corpus-duplicated 8-token gram — the memorization scrub
-    near-dup LSH cannot express. Portable-hash mode so DuckDB replays the
+    near-dup LSH cannot express. The md5 gram hash lets DuckDB replay the
     gram hashing bit-for-bit; the oracle rebuilds grams, the duplicated
     set, covered positions and the gap-and-islands span merge."""
     df = load(spark, sf_dir, "documents")
     out = dd.duplicated_substring_spans(
-        df, "doc_id", "text", k=8, portable_hash=True)
+        df, "doc_id", "text", k=8)
     return out.select(
         F.col("id").cast("long").alias("id"),
         F.col("span_start").cast("long").alias("span_start"),
@@ -2144,7 +2144,7 @@ def minhash_dedup_documents(spark, sf_dir):
     bit-for-bit (same pattern as SimHash)."""
     df = load(spark, sf_dir, "documents")
     return dd.minhash_dedup(
-        df, "doc_id", "text", threshold=0.7, portable_hash=True
+        df, "doc_id", "text", threshold=0.7
     ).select("doc_id", "lang", "source")
 
 
@@ -2180,7 +2180,7 @@ def near_dup_clusters_documents(spark, sf_dir):
     # component via est=1.0 band collisions in the oracle's closure too)
     # but immune to hot boilerplate groups — see ops/dedup.py
     return dd.minhash_near_dup_clusters(
-        df, "doc_id", "text", threshold=0.7, portable_hash=True)
+        df, "doc_id", "text", threshold=0.7)
 
 
 _SIMHASH_ORACLE = (
@@ -2208,7 +2208,7 @@ def simhash_candidates_documents(spark, sf_dir):
     Hamming <= 3 (north-star dedup). Portable md5 token hash so the DuckDB
     oracle reproduces the fingerprints bit-for-bit."""
     df = load(spark, sf_dir, "documents")
-    return dd.simhash_candidates(df, "doc_id", "text", portable_hash=True)
+    return dd.simhash_candidates(df, "doc_id", "text")
 
 
 # ------------------------------------------- LLM-pipeline: similarity search
@@ -3460,12 +3460,12 @@ def winnowing_fingerprints_documents(spark, sf_dir):
       (max_df=20) and a min_shared=10 floor; catches long verbatim
       overlap that whole-document MinHash misses."""
     docs = load(spark, sf_dir, "documents")
-    fps = ts.winnowing_fingerprints(docs, "doc_id", "text", portable_hash=True)
+    fps = ts.winnowing_fingerprints(docs, "doc_id", "text")
     fp_rows = fps.select(
         F.lit("fp").alias("method"), F.col("id").alias("a"),
         F.lit(None).cast("long").alias("b"), F.col("fp").alias("val"))
     pair_rows = dd.substring_overlap_pairs(
-        docs, "doc_id", "text", min_shared=10, max_df=20, portable_hash=True,
+        docs, "doc_id", "text", min_shared=10, max_df=20,
     ).select(
         F.lit("pairs").alias("method"), F.col("id_a").alias("a"),
         F.col("id_b").alias("b"), F.col("n_shared").alias("val"))
@@ -3919,13 +3919,12 @@ def dedup_lines_documents(spark, sf_dir):
     keyed reassembly."""
     df = load(spark, sf_dir, "documents")
     staged = dd.reflow_lines(df, "doc_id", "text", width=10)
-    return dd.dedup_lines(staged, "doc_id", "text", portable_hash=True)
+    return dd.dedup_lines(staged, "doc_id", "text")
 
 
-# Deterministic sampling / split / mix (r8): previously unit-only because
-# membership keyed on xxhash64, which no SQL engine reproduces. The
-# sampling module now takes portable_hash=True (the package's md5-60-bit
-# winnowing convention), so the WHOLE family is replayed in SQL: sample
+# Deterministic sampling / split / mix (r8): membership keys on the
+# package's md5-60-bit winnowing convention, so the WHOLE family is
+# replayed in SQL: sample
 # keep/drop, three-way split assignment, and two-source mixing with the
 # no-upsampling target (T = min(n_i/w_i), per-source rate = min(1,
 # T*w_i/n_i)) — every arithmetic step mirrored operation-for-operation so
@@ -3968,8 +3967,8 @@ _SAMPLING_ORACLE = (
 
 @q("sampling_split_mix_documents", _SAMPLING_ORACLE)
 def sampling_split_mix_documents(spark, sf_dir):
-    """Deterministic sampling family (ops/sampling) under portable_hash,
-    one suite row via the mode discriminator: ``sample`` = hash_sample at
+    """Deterministic sampling family (ops/sampling) on the md5 hash, one
+    suite row via the mode discriminator: ``sample`` = hash_sample at
     rate 0.5; ``split`` = hash_split train/val/test 0.8/0.1/0.1 (disjoint,
     exhaustive, reproducible-on-regrowth membership); ``mix`` =
     mix_corpora over the even/odd halves at exact weights 0.8/0.2 — the
@@ -3980,20 +3979,18 @@ def sampling_split_mix_documents(spark, sf_dir):
     from graflo_spark.ops import sampling as sp
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    sample = sp.hash_sample(
-        docs, "doc_id", 0.5, portable_hash=True).select(
+    sample = sp.hash_sample(docs, "doc_id", 0.5).select(
         F.lit("sample").alias("mode"), F.col("doc_id").alias("id"),
         F.lit("kept").alias("tag"))
     split = sp.hash_split(
-        docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1},
-        portable_hash=True).select(
+        docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}).select(
         F.lit("split").alias("mode"), F.col("doc_id").alias("id"),
         F.col("split").alias("tag"))
     even = docs.filter(F.col("doc_id") % 2 == 0)
     odd = docs.filter(F.col("doc_id") % 2 == 1)
     mixed = sp.mix_corpora(
         {"even": even, "odd": odd}, {"even": 0.8, "odd": 0.2},
-        "doc_id", portable_hash=True).select(
+        "doc_id").select(
         F.lit("mix").alias("mode"), F.col("doc_id").alias("id"),
         F.col("source_name").alias("tag"))
     return sample.unionByName(split).unionByName(mixed)
@@ -4902,7 +4899,7 @@ _BUDGET_CUTS_SQL = (
     + _SLIDING_ORACLE + ")",
 )
 def corpus_io_suite(spark, sf_dir):
-    """Deterministic sampling/split/mix (portable-hash SQL replay), the
+    """Deterministic sampling/split/mix (md5-hash SQL replay), the
     five text-format scan round-trips, and token-budget corpus selection
     (ops/sampling.select_to_token_budget) in BOTH modes: 'budget' = the
     exact running-sum window (biggest documents first until the 50k-char
@@ -5247,7 +5244,7 @@ def text_quality_suite(spark, sf_dir):
         dsir.select(F.lit("dsir_logw").alias("kind"),
                     F.col("id").cast("long").alias("id"), nl_s.alias("s"),
                     F.round("log_w", 6).alias("v")),
-        dsir_select(dsir, _DSIR_K, portable_hash=True).select(
+        dsir_select(dsir, _DSIR_K).select(
             F.lit("dsir_sel").alias("kind"),
             F.col("id").cast("long").alias("id"), nl_s.alias("s"),
             F.round("gumbel_key", 6).alias("v")),

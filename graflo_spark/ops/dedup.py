@@ -4,25 +4,29 @@ embedding-cosine near-dup.
 Scale design notes:
     - exact dedup is one hash aggregate on the key (AQE handles skew);
     - MinHash/LSH never compares all pairs: signatures are per-row map work
-      (JVM-side `transform`/`array_min`; the portable-md5 variant runs as an
-      Arrow-batched map pass — see ``_minhash_signatures_md5_arrow``),
-      candidate generation is an equi-join on (band, band_hash) — the
-      classic shuffle-bounded LSH;
+      (one Arrow-batched pass — see :func:`minhash_signatures`), candidate
+      generation is an equi-join on (band, band_hash) — the classic
+      shuffle-bounded LSH;
     - n-gram Jaccard uses blocking keys to bound the self-join;
     - the per-row paths are native Column expressions or vectorized Arrow
-      batches — never row-at-a-time Python.
+      batches — never row-at-a-time Python;
+    - every content hash is the package's md5 family (``ops/util.md5_bits``),
+      so a SQL oracle reproduces signatures, bands and line/gram keys.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graflo_spark.ops.util import ensure_min_parallelism, scoped_persist
+from graflo_spark.ops.util import (
+    ensure_min_parallelism,
+    md5_bits,
+    py_md5_bits,
+    scoped_persist,
+)
 
 
 def exact_dedup(df: DataFrame, cols: list[str], id_col: str,
@@ -81,66 +85,54 @@ def minhash_signatures(
     text_col: str,
     shingle_k: int = 5,
     num_perm: int = 64,
-    portable_hash: bool = False,
     unique_ids: bool = False,
 ) -> DataFrame:
-    """``(id, sig: array<long>)`` MinHash signatures.
+    """``(id, sig: array<long>)`` MinHash signatures, computed in one
+    Arrow-batched map pass and bit-identical to the expression chain
+    explode -> md5 -> conv -> ``num_perm`` min-aggregates (pinned by
+    test_minhash_portable_arrow_matches_expression_chain; the chain costs
+    ~2.5x the vectorized pass, r14: 1.7 s -> 0.7 s at sf0.1):
 
-    Default (xxhash64) shape: explode shingles -> ONE xxhash64 per (doc,
-    shingle) -> num_perm min-aggregates over cheap affine re-permutations,
-    all inside one whole-stage-codegen'd partial+final hash aggregate. The
-    alternative (per-row higher-order ``transform``/``array_min``) is
-    CodegenFallback (interpreted) and re-evaluates the shingle subtree per
-    permutation — ~100x slower and the difference grows with document
-    length.
+    - shingles: ``text[i:i+k]`` for i in range(max(len-k+1, 1)) — Python
+      slicing by code points matches Spark ``substring`` semantics
+      including the short-text case (one shingle = the whole text);
+    - hash: ``md5_bits(shingle, 8)`` masked to 31 bits — a SQL oracle
+      reproduces it (DuckDB ``('0x'||substr(md5(s),1,8))::BIGINT``);
+    - permutations: ``(a*h + b) % M31`` in int64 (a, h < 2^31 so the
+      product fits), min per permutation — exact integer arithmetic.
 
-    ``portable_hash`` swaps xxhash64 for a 32-bit md5-derived shingle hash
-    a SQL oracle reproduces exactly (DuckDB
-    ``('0x'||substr(md5(s),1,8))::BIGINT``), computed on the Arrow fast
-    path (:func:`_minhash_signatures_md5_arrow`): md5 through an
-    expression chain costs ~2.5x the vectorized pass (r14 measurement,
-    1.7 s -> 0.7 s at sf0.1).
-
-    Scale: shuffle is one 64-wide row per doc per partition either way
-    (the xxhash64 path reduces the shingle explosion map-side; the Arrow
-    path never explodes at all).
+    Rows with NULL text produce an ALL-NULL signature, matching the
+    expression chain (``greatest(length(NULL)-k+1, 1)`` is 1 — greatest
+    skips NULLs — so it emits one NULL shingle whose NULL hash makes every
+    min-aggregate NULL). Duplicate ids are merged by ELEMENTWISE min — min
+    over the union of two docs' shingle sets equals the elementwise min
+    of their signatures, and SQL min skips NULLs on both sides — so the
+    merge ships one 64-wide row per doc.
 
     ``unique_ids``: promise that ``id_col`` is unique (e.g. the input is
     the exact-collapse representative frame, min-id per distinct text).
-    The Arrow path's duplicate-id merge aggregate is then the identity —
-    min over one row per permutation — and is skipped: one full shuffle
-    (and a 32-task stage per call at local defaults) less. The xxhash64
-    path is unaffected (its groupBy IS the signature aggregation).
+    The duplicate-id merge aggregate is then the identity — min over one
+    row per permutation — and is skipped: one full shuffle (and a 32-task
+    stage per call at local defaults) less.
     """
-    if portable_hash:
-        return _minhash_signatures_md5_arrow(
-            df, id_col, text_col, shingle_k, num_perm,
-            unique_ids=unique_ids)
-    coeffs = _perm_coeffs(num_perm)
-    df = ensure_min_parallelism(df)
-    # no array_distinct: the min aggregate is duplicate-insensitive (min over
-    # a multiset equals min over its set), and measured at sf0.1 the per-row
-    # hash-set build costs ~2x more than the extra exploded rows it removes
-    shingled = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(char_shingles(F.col(text_col), shingle_k)).alias("s"),
-    )
-    hashed = shingled.select(
-        "id", F.xxhash64("s").bitwiseAND(F.lit(_MERSENNE_31)).alias("h"))
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MERSENNE_31)).alias(
-            f"_m{i}"
-        )
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return hashed.groupBy("id").agg(*aggs).select(
-        "id", F.array(*[f"_m{i}" for i in range(num_perm)]).alias("sig")
-    )
+    sig_of = _md5_sig_udf(shingle_k, num_perm)
+    per_row = ensure_min_parallelism(df).select(
+        F.col(id_col).alias("id"), sig_of(F.col(text_col)).alias("sig"))
+    if unique_ids:
+        # one row per id by caller contract: the merge aggregate below is
+        # the identity (elementwise min over a single row) — skip its
+        # shuffle outright (r14, guide §2.4 "a distinct on data that is
+        # already unique")
+        return per_row
+    return per_row.groupBy("id").agg(
+        F.array(*[
+            F.min(F.element_at("sig", i + 1)) for i in range(num_perm)
+        ]).alias("sig"))
 
 
 def _md5_sig_udf(shingle_k: int, num_perm: int):
-    """The Arrow-batched portable-md5 signature UDF (see
-    :func:`_minhash_signatures_md5_arrow` for the bit-identity proof)."""
+    """The Arrow-batched md5 signature UDF (see
+    :func:`minhash_signatures` for the bit-identity proof)."""
     import numpy as np
 
     coeffs = _perm_coeffs(num_perm)
@@ -157,9 +149,7 @@ def _md5_sig_udf(shingle_k: int, num_perm: int):
                 continue
             n = max(len(t) - (shingle_k - 1), 1)
             hs = np.fromiter(
-                (int(hashlib.md5(
-                    t[i:i + shingle_k].encode("utf-8")).hexdigest()[:8], 16)
-                 & _MERSENNE_31
+                (py_md5_bits(t[i:i + shingle_k], 8) & _MERSENNE_31
                  for i in range(n)),
                 dtype=np.int64, count=n)
             out.append(((a_col * hs[None, :] + b_col) % _MERSENNE_31)
@@ -175,36 +165,26 @@ def _rep_signatures(
     text_col: str,
     shingle_k: int = 5,
     num_perm: int = 64,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """``(id, sig)`` — one row per DISTINCT text with its min-id
     representative: the exact-collapse + signature composition every
     dedup entry point runs.
 
-    On the portable (Arrow) path the signature is computed BEFORE the
-    collapse (r15, guide §2.3 "shuffle keys and metadata instead of
-    payloads" / §8): the former ``_exact_text_reps -> minhash_signatures``
-    order shuffled the full text body twice — once inside the collapse
-    (whose ``first(text)`` aggregate existed ONLY to feed the signature
-    UDF, and whose var-width buffer forced a SortAggregate) and once in
-    the parallelism-floor repartition ahead of the UDF. Computing the
-    per-row signature on scan partitions first, the collapse groups by
-    ``(sha256 digest, sig)`` — ~550 narrow bytes per row — with a
+    The signature is computed BEFORE the collapse (r15, guide §2.3
+    "shuffle keys and metadata instead of payloads" / §8): a
+    collapse-first order shuffled the full text body twice — once inside
+    the collapse (whose ``first(text)`` aggregate existed ONLY to feed the
+    signature UDF, and whose var-width buffer forced a SortAggregate) and
+    once in the parallelism-floor repartition ahead of the UDF. Computing
+    the per-row signature on scan partitions first, the collapse groups
+    by ``(sha256 digest, sig)`` — ~550 narrow bytes per row — with a
     fixed-width ``min(id)`` buffer (HashAggregate, map-side partials).
-    Identical output: identical texts hash to identical signatures, and
-    the group's min id is the same representative `_exact_text_reps`
-    picks. The extra cost is one signature per DUPLICATE row (instead of
-    per distinct text) — bounded by the duplicate fraction — against a
-    full-corpus payload shuffle saved.
-
-    The xxhash64 expression path keeps the collapse-first order: its
-    signature aggregate is itself a narrow map-side-reduced groupBy, and
-    sig-first would need an extra (id -> digest) join instead."""
-    if not portable_hash:
-        reps = _exact_text_reps(nonnull, id_col, text_col)
-        return minhash_signatures(
-            reps, id_col, text_col, shingle_k, num_perm,
-            portable_hash, unique_ids=True)
+    Texts within a digest group are identical up to a ~2^-128 collision
+    (accepted; same tradeoff as content-addressed storage), identical
+    texts hash to identical signatures, and the group's min id is the
+    representative. The extra cost is one signature per DUPLICATE row
+    (instead of per distinct text) — bounded by the duplicate fraction —
+    against a full-corpus payload shuffle saved."""
     sig_of = _md5_sig_udf(shingle_k, num_perm)
     per_row = ensure_min_parallelism(nonnull).select(
         F.sha2(F.col(text_col), 256).alias("__td"),
@@ -218,52 +198,6 @@ def _rep_signatures(
     )
 
 
-def _minhash_signatures_md5_arrow(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int,
-    num_perm: int,
-    unique_ids: bool = False,
-) -> DataFrame:
-    """Arrow-batched portable-md5 MinHash signatures, bit-identical to the
-    former expression chain (pinned by
-    test_minhash_portable_arrow_matches_expression_chain):
-
-    - shingles: ``text[i:i+k]`` for i in range(max(len-k+1, 1)) — Python
-      slicing by code points matches Spark ``substring`` semantics
-      including the short-text case (one shingle = the whole text);
-    - hash: first 8 hex chars of md5(utf-8 bytes) parsed base-16, masked
-      to 31 bits — hashlib, JVM md5 and DuckDB md5 agree byte-for-byte;
-    - permutations: ``(a*h + b) % M31`` in int64 (a, h < 2^31 so the
-      product fits), min per permutation — exact integer arithmetic.
-
-    Rows with NULL text produce an ALL-NULL signature, matching the
-    expression path (``greatest(length(NULL)-k+1, 1)`` is 1 — greatest
-    skips NULLs — so the old chain emitted one NULL shingle whose NULL
-    hash made every min-aggregate NULL). Duplicate ids are merged by
-    ELEMENTWISE min — min over the union of two docs' shingle sets equals
-    the elementwise min of their signatures, and SQL min skips NULLs on
-    both paths — so the merge aggregate reproduces the former
-    groupBy-over-shingles semantics exactly; it ships the same one
-    64-wide row per doc the old partial aggregate shipped."""
-    sig_of = _md5_sig_udf(shingle_k, num_perm)
-    base = ensure_min_parallelism(df)
-    per_row = base.select(
-        F.col(id_col).alias("id"), sig_of(F.col(text_col)).alias("sig"))
-    if unique_ids:
-        # one row per id by caller contract: the merge aggregate below is
-        # the identity (elementwise min over a single row) — skip its
-        # shuffle outright (r14, guide §2.4 "a distinct on data that is
-        # already unique")
-        return per_row
-    merged = per_row.groupBy("id").agg(
-        F.array(*[
-            F.min(F.element_at("sig", i + 1)) for i in range(num_perm)
-        ]).alias("sig"))
-    return merged
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -271,7 +205,6 @@ def minhash_lsh_candidates(
     shingle_k: int = 5,
     num_perm: int = 64,
     bands: int = 16,
-    portable_hash: bool = False,
     unique_ids: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH.
@@ -281,7 +214,7 @@ def minhash_lsh_candidates(
     :func:`ngram_jaccard_pairs` when exactness matters.
     """
     cand, _sig = _lsh_candidates_with_sigs(
-        df, id_col, text_col, shingle_k, num_perm, bands, portable_hash,
+        df, id_col, text_col, shingle_k, num_perm, bands,
         unique_ids=unique_ids)
     return cand
 
@@ -293,7 +226,6 @@ def _lsh_candidates_with_sigs(
     shingle_k: int = 5,
     num_perm: int = 64,
     bands: int = 16,
-    portable_hash: bool = False,
     unique_ids: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """(candidate pairs, the persisted ``(id, sig)`` table they were built
@@ -310,10 +242,10 @@ def _lsh_candidates_with_sigs(
     # blocks instead of recomputing from the input files (ops/util.py).
     sig = scoped_persist(
         minhash_signatures(
-            df, id_col, text_col, shingle_k, num_perm, portable_hash,
+            df, id_col, text_col, shingle_k, num_perm,
             unique_ids=unique_ids),
         "minhash_lsh_candidates.sig")
-    return _candidates_from_sigs(sig, num_perm, bands, portable_hash), sig
+    return _candidates_from_sigs(sig, num_perm, bands), sig
 
 
 def _rep_candidates_with_sigs(
@@ -323,45 +255,36 @@ def _rep_candidates_with_sigs(
     shingle_k: int = 5,
     num_perm: int = 64,
     bands: int = 16,
-    portable_hash: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """The exact-collapse dedup entry shape: candidate pairs + the
     persisted ``(id, sig)`` table over the min-id representative of each
-    distinct non-null text (:func:`_rep_signatures` — sig-first on the
-    portable path, so no shuffle carries the text payload)."""
+    distinct non-null text (:func:`_rep_signatures` — sig-first, so no
+    shuffle carries the text payload)."""
     sig = scoped_persist(
-        _rep_signatures(nonnull, id_col, text_col, shingle_k, num_perm,
-                        portable_hash),
+        _rep_signatures(nonnull, id_col, text_col, shingle_k, num_perm),
         "minhash_lsh_candidates.sig")
-    return _candidates_from_sigs(sig, num_perm, bands, portable_hash), sig
+    return _candidates_from_sigs(sig, num_perm, bands), sig
 
 
-def _band_hash_fn(portable_hash: bool):
-    # portable: md5-derived 32-bit band key (SQL-reproducible); default:
-    # murmur3 (narrower/faster). Both keep the shuffle key 8 bytes.
-    if portable_hash:
-        return lambda c: F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-    return F.hash
-
-
-def _banded(sig: DataFrame, num_perm: int, bands: int,
-            portable_hash: bool) -> DataFrame:
-    """``(id, band, band_hash)`` — one row per (doc, band)."""
+def _banded(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """``(id, band, band_hash)`` — one row per (doc, band); the band key
+    is the 32-bit md5 of the band's comma-joined values (8-byte shuffle
+    key, SQL-reproducible)."""
     rows_per_band = num_perm // bands
-    band_hash = _band_hash_fn(portable_hash)
     return sig.select(
         "id",
         F.posexplode(
             F.array(
                 *[
-                    band_hash(
+                    md5_bits(
                         F.array_join(
                             F.transform(
                                 F.slice("sig", b * rows_per_band + 1, rows_per_band),
                                 lambda x: x.cast("string"),
                             ),
                             ",",
-                        )
+                        ),
+                        8,
                     )
                     for b in range(bands)
                 ]
@@ -384,14 +307,14 @@ def _sig_agreement(num_perm: int) -> F.Column:
 
 
 def _candidates_from_sigs(
-    sig: DataFrame, num_perm: int, bands: int, portable_hash: bool
+    sig: DataFrame, num_perm: int, bands: int
 ) -> DataFrame:
     # Candidate generation carries ONLY ids through the band join and the
     # pair dedup — a pair colliding in m bands would otherwise ship both
     # 64-long signatures m times through two shuffles. Signatures are
     # re-attached afterwards (one join per side on the one-row-per-doc sig
     # table): dedup early, hydrate late.
-    banded = _banded(sig, num_perm, bands, portable_hash)
+    banded = _banded(sig, num_perm, bands)
     a = banded.select(F.col("id").alias("id_a"), "band", "band_hash")
     b = banded.select(F.col("id").alias("id_b"), "band", "band_hash")
     pairs = (
@@ -410,23 +333,6 @@ def _candidates_from_sigs(
         "id_b",
         _sig_agreement(num_perm).alias("est_jaccard"),
     )
-
-
-def _exact_text_reps(
-    nonnull: DataFrame, id_col: str, text_col: str, keep_digest: bool = False
-) -> DataFrame:
-    """Min-id representative per distinct text, grouped on a sha256 DIGEST
-    of the text rather than the text itself: the exact-dup collapse would
-    otherwise shuffle full multi-KB document bodies as the aggregation key.
-    Texts within a digest group are identical up to a ~2^-128 collision
-    (accepted; same tradeoff as content-addressed storage). ``keep_digest``
-    retains the ``__td`` column for digest-keyed expansion joins."""
-    out = (
-        nonnull.withColumn("__td", F.sha2(F.col(text_col), 256))
-        .groupBy("__td")
-        .agg(F.min(id_col).alias(id_col), F.first(text_col).alias(text_col))
-    )
-    return out if keep_digest else out.drop("__td")
 
 
 def minhash_dedup(
@@ -455,7 +361,7 @@ def minhash_dedup(
     # (groupBy would lump every NULL into one group and drop all but one.)
     nonnull = df.filter(F.col(text_col).isNotNull())
     # one row per distinct text with its unique min-id representative;
-    # sig-first on the portable path so no shuffle carries the text
+    # sig-first so no shuffle carries the text
     cand, sig = _rep_candidates_with_sigs(nonnull, id_col, text_col,
                                           **lsh_kwargs)
     drop = (
@@ -508,15 +414,11 @@ def ngram_jaccard_pairs(
 
 def simhash_fingerprints(
     df: DataFrame, id_col: str, text_col: str, bits: int = 32,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """``(id, fp)`` SimHash fingerprints: bit b of fp is the sign of
-    sum over tokens of (+1 if hash-bit b set else -1).
-
-    ``portable_hash`` swaps murmur3 for a 32-bit md5-derived token hash a
-    SQL oracle reproduces exactly (DuckDB
-    ``('0x'||substr(md5(t),1,8))::BIGINT``) — for cross-engine
-    verification; the default stays the fast path.
+    sum over tokens of (+1 if hash-bit b set else -1), over the 32-bit
+    md5 token hash a SQL oracle reproduces exactly (DuckDB
+    ``('0x'||substr(md5(t),1,8))::BIGINT``).
 
     Shape: explode tokens -> one token hash per (doc, token) -> ``bits``
     conditional-sum aggregates -> recombine. Whole-stage codegen throughout
@@ -526,12 +428,7 @@ def simhash_fingerprints(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("t"),
     )
-    h = (
-        F.conv(F.substring(F.md5("t"), 1, 8), 16, 10).cast("long")
-        if portable_hash
-        else F.hash("t").cast("long")
-    )
-    hashed = tokens.select("id", h.alias("h"))
+    hashed = tokens.select("id", md5_bits("t", 8).alias("h"))
     votes = [
         F.sum(
             F.when(F.col("h").bitwiseAND(F.lit(1 << b).cast("long")) != 0, 1)
@@ -550,12 +447,12 @@ def simhash_fingerprints(
 
 def simhash_candidates(
     df: DataFrame, id_col: str, text_col: str, bits: int = 32, band_bits: int = 8,
-    max_hamming: int = 3, portable_hash: bool = False,
+    max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup candidates: split the fingerprint into bands; pairs sharing
     any band are compared by exact Hamming distance (<= max_hamming)."""
     n_bands = bits // band_bits
-    fp = simhash_fingerprints(df, id_col, text_col, bits, portable_hash)
+    fp = simhash_fingerprints(df, id_col, text_col, bits)
     banded = fp.select(
         "id",
         "fp",
@@ -695,7 +592,6 @@ class MinHashDedupStore:
         shingle_k: int = 5,
         num_perm: int = 64,
         bands: int = 16,
-        portable_hash: bool = False,
         pin_results: bool = False,
     ):
         self.spark = spark
@@ -706,7 +602,6 @@ class MinHashDedupStore:
         self.shingle_k = shingle_k
         self.num_perm = num_perm
         self.bands = bands
-        self.portable_hash = portable_hash
         # Per-batch localCheckpoint blocks are tracked across dedup_batch
         # calls so a long-running stream doesn't accumulate one dead block
         # set per micro-batch (the session-accumulation footgun measured
@@ -798,17 +693,15 @@ class MinHashDedupStore:
         pass through as survivors and are not stored."""
         # collapse exact duplicates to their min-id representative first —
         # output-identical (see minhash_dedup) and immune to hot boilerplate
-        # groups exploding the within-batch band join; sig-first on the
-        # portable path (no shuffle carries the text — _rep_signatures)
+        # groups exploding the within-batch band join; sig-first (no
+        # shuffle carries the text — _rep_signatures)
         sig = _rep_signatures(
             df.filter(F.col(self.text_col).isNotNull()),
-            self.id_col, self.text_col,
-            self.shingle_k, self.num_perm, self.portable_hash,
+            self.id_col, self.text_col, self.shingle_k, self.num_perm,
         ).persist()
 
         # (a) within-batch: greedy drop-larger-id over verified candidates
-        cand = _candidates_from_sigs(
-            sig, self.num_perm, self.bands, self.portable_hash)
+        cand = _candidates_from_sigs(sig, self.num_perm, self.bands)
         drop_within = (
             cand.filter(F.col("est_jaccard") >= self.threshold)
             .select(F.col("id_b").alias("id"))
@@ -827,8 +720,7 @@ class MinHashDedupStore:
         stored_bands = self._stored("bands")
         stored_sigs = self._stored("sigs")
         if stored_bands is not None and stored_sigs is not None:
-            new_banded = _banded(
-                kept, self.num_perm, self.bands, self.portable_hash)
+            new_banded = _banded(kept, self.num_perm, self.bands)
             probe = (
                 new_banded.join(
                     stored_bands.select(
@@ -877,7 +769,7 @@ class MinHashDedupStore:
         # poisons every later read.
         if to_store.limit(1).count() > 0:
             _banded(
-                to_store, self.num_perm, self.bands, self.portable_hash
+                to_store, self.num_perm, self.bands
             ).write.mode("append").partitionBy("band").parquet(
                 f"{self.path}/bands")
             to_store.write.mode("append").parquet(f"{self.path}/sigs")
@@ -1417,7 +1309,6 @@ def substring_overlap_pairs(
     window: int = 4,
     min_shared: int = 10,
     max_df: int | None = None,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """MOSS-style common-substring pair detection over winnowing
     fingerprints: report document pairs sharing >= ``min_shared``
@@ -1440,9 +1331,7 @@ def substring_overlap_pairs(
     """
     from graflo_spark.ops.textstats import winnowing_fingerprints
 
-    fps = winnowing_fingerprints(
-        df, id_col, text_col, k=k, window=window,
-        portable_hash=portable_hash)
+    fps = winnowing_fingerprints(df, id_col, text_col, k=k, window=window)
     if max_df is not None:
         keep = (
             fps.groupBy("fp").agg(F.count("*").alias("_df"))
@@ -1465,7 +1354,6 @@ def dedup_lines(
     id_col: str = "doc_id",
     text_col: str = "text",
     delimiter: str = "\n",
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Corpus-wide LINE-level exact dedup, the C4 / Dolma / RefinedWeb
     scrub (Raffel et al. 2020 §2.2 "three-sentence span" policy,
@@ -1482,18 +1370,18 @@ def dedup_lines(
     dedup is the cheap high-yield middle the published pipelines all run.
 
     Scale shape: posexplode to lines (one shuffle keyed on doc id), hash
-    each line to 64 bits so the duplicate-detection shuffle moves hashes,
+    each line to 60 bits (``md5_bits(line, 15)``, the md5 family a SQL
+    oracle reproduces) so the duplicate-detection shuffle moves hashes,
     not text; groupBy line hash is map-side combinable and its OUTPUT
     (the duplicated-line table) is Zipf-small next to the corpus; one
     equi-join back on the hash (AQE broadcasts the small dup table); the
     in-order re-assembly groups on doc id. Same birthday-collision note
-    as the span scrub: at 10^13 lines a 64-bit hash mis-drops ~1e-7 of
-    lines — acceptable for a scrub, documented. ``portable_hash`` swaps
-    the md5-derived 60-bit hash a SQL oracle reproduces bit-for-bit.
+    as the span scrub: at 10^13 lines a 60-bit hash mis-drops ~1e-5 of
+    lines — acceptable for a scrub, documented.
 
     Reference analogue: none (north-star training-pipeline extension).
     """
-    hashed = _hashed_lines(df, id_col, text_col, delimiter, portable_hash)
+    hashed = _hashed_lines(df, id_col, text_col, delimiter)
     owners = (
         hashed.groupBy("_h")
         .agg(
@@ -1550,7 +1438,6 @@ def reflow_lines(
 
 def _hashed_lines(
     df: DataFrame, id_col: str, text_col: str, delimiter: str,
-    portable_hash: bool,
 ) -> DataFrame:
     """``(id, pos, line, _h)`` for every line of every non-NULL text.
     delimiter is a Java regex for SPLITTING but a literal string for the
@@ -1564,12 +1451,7 @@ def _hashed_lines(
             .alias("pos", "line"),
         )
     )
-    h = (
-        F.conv(F.substring(F.md5("line"), 1, 15), 16, 10).cast("long")
-        if portable_hash
-        else F.xxhash64("line")
-    )
-    return lines.withColumn("_h", h)
+    return lines.withColumn("_h", md5_bits("line", 15))
 
 
 def _reassemble_lines(
@@ -1641,7 +1523,6 @@ class LineDedupStore:
         id_col: str = "doc_id",
         text_col: str = "text",
         delimiter: str = "\n",
-        portable_hash: bool = False,
         pin_results: bool = False,
     ):
         import os
@@ -1651,7 +1532,6 @@ class LineDedupStore:
         self.id_col = id_col
         self.text_col = text_col
         self.delimiter = delimiter
-        self.portable_hash = portable_hash
         os.makedirs(f"{self.path}/lines", exist_ok=True)
         from graflo_spark.ops.graphalgo import _RoundCheckpointer
 
@@ -1795,8 +1675,7 @@ class LineDedupStore:
                 and str(batch_id) == last_bid and seq > 0):
             seq -= 1  # post-commit replay: re-run under the original seq
         hashed = _hashed_lines(
-            df, self.id_col, self.text_col, self.delimiter,
-            self.portable_hash)
+            df, self.id_col, self.text_col, self.delimiter)
         hist = self._history(upto=seq)
         fresh = (
             hashed if hist is None
@@ -1849,7 +1728,6 @@ def duplicated_substring_spans(
     text_col: str = "text",
     k: int = 8,
     exclude_first_occurrence: bool = False,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """EXACT repeated-substring detection, the Lee et al. 2022
     ("Deduplicating Training Data Makes Language Models Better", public)
@@ -1880,10 +1758,10 @@ def duplicated_substring_spans(
       doc, group by position - row_number) — shuffles stay keyed on doc
       id throughout.
 
-    Production hashes grams with xxhash64 (64-bit: at 10^13 grams expect
-    a ~1e-7 birthday false-positive mark rate — acceptable for a scrub,
-    documented); ``portable_hash`` swaps the md5-derived 60-bit hash a
-    DuckDB oracle reproduces bit-for-bit (the winnowing convention).
+    Grams hash with ``md5_bits(g, 15)`` (60-bit, the winnowing convention
+    a DuckDB oracle reproduces bit-for-bit; at 10^13 grams expect a ~1e-5
+    birthday false-positive mark rate — acceptable for a scrub,
+    documented).
 
     Reference analogue: none (north-star training-pipeline extension).
     """
@@ -1908,12 +1786,7 @@ def duplicated_substring_spans(
         .filter(F.col("_last").isNotNull())
         .drop("_last")
     )
-    h = (
-        F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("long")
-        if portable_hash
-        else F.xxhash64("g")
-    )
-    grams = grams.select("id", "pos", h.alias("h"))
+    grams = grams.select("id", "pos", md5_bits("g", 15).alias("h"))
     dup = (
         grams.groupBy("h")
         .agg(

@@ -61,9 +61,8 @@ def train_bigram_lm(
 ) -> BigramLm:
     """Fit the bigram LM on the deterministic reference slice
     ``id % train_mod == 0`` (the same SQL-mirrorable convention as the
-    decontamination benchmark split — ``hash_sample`` would be
-    deterministic too but keys on Spark's xxhash64, which an external
-    oracle can't reproduce). Two aggregates; the eager ``v`` count is one
+    decontamination benchmark split — a plain modulus any engine replays
+    without an md5 bucket). Two aggregates; the eager ``v`` count is one
     tiny job."""
     train = df.filter(F.col(id_col) % train_mod == 0)
     bg = _doc_bigrams(train, id_col, text_col)

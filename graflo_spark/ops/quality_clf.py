@@ -5,9 +5,9 @@ crawl page look like the reference corpus?"). The model is multinomial
 Naive Bayes over hashing-trick features: every word unigram (and word
 bigram) hashes into one of ``n_bins`` buckets, training reduces to ONE
 per-bucket count aggregate over a labeled reference slice, and scoring is
-one explode + one broadcast join + one per-doc sum — closed-form, fully
-distributed, and replayable operation-for-operation in ANSI SQL (the
-oracle property a binary fastText model could never give).
+one per-document sum of bucket weights — closed-form, fully distributed,
+and replayable operation-for-operation in ANSI SQL (the oracle property a
+binary fastText model could never give).
 
 Model. With per-bucket training counts ``cp/cn`` (positive/negative token
 occurrences), totals ``TP/TN``, and Laplace smoothing over the bin space:
@@ -18,20 +18,18 @@ occurrences), totals ``TP/TN``, and Laplace smoothing over the bin space:
     prob  = sigmoid(logit)
 
 Buckets unseen in training contribute the smoothing-floor weight
-``default_w`` (both counts zero), applied via COALESCE after the left
-join — never silently zero.
+``default_w`` (both counts zero) — never silently zero (a SQL replay
+applies it via COALESCE after a left join on the weight table).
 
-Scale shape: training explodes only the labeled SLICE (sample-bounded);
-the weight table is at most ``n_bins`` rows — broadcast. Scoring explodes
-each document once (posexplode + lead window, the codegen formulation the
-package A/B'd against interpreted array-lambda HOFs at winnowing —
-ops/textstats.py:257), joins the broadcast weights, and aggregates per
-doc: one shuffle on the doc id, no Python anywhere, no driver-side loops.
+Scale shape: training is one Arrow-batched pass over the labeled SLICE
+(sample-bounded) emitting per-batch partial count maps; the weight table
+is at most ``n_bins`` rows, built on the driver. Scoring is one
+Arrow-batched pass per document against that weight map plus one
+narrow per-doc merge — no feature explosion, no weight join.
 
-The hash is either xxhash64 (production: one JVM intrinsic per feature)
-or the package's portable md5-60-bit convention (first 15 hex chars —
-winnowing/sampling precedent) so an external engine reproduces bucket
-membership bit-for-bit.
+The hash is the package's md5-60-bit convention (``ops/util.md5_bits``
+with 15 hex chars — winnowing/sampling precedent), so an external engine
+reproduces bucket membership bit-for-bit.
 
 Reference parity: the reference ships no quality classifier; this is one
 of the LLM-pipeline extensions (SURVEY §2.13) built from the published
@@ -40,16 +38,15 @@ method only.
 
 from __future__ import annotations
 
-import hashlib
 import math
 import re
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graflo_spark.ops.util import ensure_min_parallelism, scoped_persist
+from graflo_spark.ops.util import ensure_min_parallelism, md5_bits, py_md5_bits
 
 _US = chr(31)  # unit separator: the package's n-gram joiner convention
 
@@ -57,15 +54,16 @@ _US = chr(31)  # unit separator: the package's n-gram joiner convention
 # F.trim strips 0x20 only. The pair below reproduces
 # split(trim(text), '\s+') exactly — including the empty first/last token
 # a leading/trailing non-space whitespace char produces, and [''] for
-# empty/space-only text (probe-verified against Spark 4.1, and pinned by
+# empty/space-only text (probe-verified against Spark 4.1, and pinned
+# against the expression chain by
 # test_arrow_portable_path_matches_expression_chain).
 _JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
 
 
 def _py_feats(text: str, bigrams: bool) -> list:
-    """Feature strings of one document, matching :func:`_doc_buckets`:
-    tokenize like ``split(trim(text), '\\s+')``, then unigrams + chr(31)-
-    joined bigrams."""
+    """Feature strings of one document: tokenize like
+    ``split(trim(text), '\\s+')``, then unigrams + chr(31)-joined
+    bigrams."""
     toks = _JAVA_WS.split(text.strip(" "))
     feats = list(toks)
     if bigrams and len(toks) > 1:
@@ -74,11 +72,9 @@ def _py_feats(text: str, bigrams: bool) -> list:
 
 
 def _py_bucket(feat: str, n_bins: int) -> int:
-    """The portable md5-60-bit bucket, in Python — bucket-identical to the
-    expression path's ``conv(substring(md5(feat), 1, 15), 16, 10) %
-    n_bins`` (hashlib, JVM md5 and DuckDB md5 agree byte-for-byte;
-    MinHash precedent)."""
-    return int(hashlib.md5(feat.encode("utf-8")).hexdigest()[:15], 16) % n_bins
+    """The md5-60-bit feature bucket (SQL: ``md5_bits(feat, 15) %
+    n_bins``)."""
+    return py_md5_bits(feat, 15) % n_bins
 
 
 # feature-string memo cap per task: natural-language features are Zipf-
@@ -100,61 +96,16 @@ _QCLF_MIN_PARTS = 8
 @dataclass
 class HashedNgramNb:
     """Trained scorer state. ``weights``: (bucket, wt) — at most ``n_bins``
-    rows, broadcast at scoring; ``default_w``: smoothing-floor weight for
-    buckets unseen in training; ``bias``: document-class log prior.
-    ``wmap``: the same weights as a driver dict when training already
-    collected them (portable-hash path) — lets Arrow scoring skip a
-    collect job; None on the expression path."""
+    rows, a driver-built local relation; ``wmap``: the same weights as the
+    driver dict scoring reads; ``default_w``: smoothing-floor weight for
+    buckets unseen in training; ``bias``: document-class log prior."""
 
     weights: DataFrame
+    wmap: dict
     default_w: float
     bias: float
     n_bins: int
     bigrams: bool
-    portable_hash: bool
-    wmap: dict | None = None
-
-
-def _bucket(feat: F.Column, n_bins: int, portable_hash: bool) -> F.Column:
-    if portable_hash:
-        h = F.conv(F.substring(F.md5(feat), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.xxhash64(feat)
-    return F.pmod(h, F.lit(n_bins))
-
-
-def _doc_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_bins: int,
-    bigrams: bool,
-    portable_hash: bool,
-    carry: list[str] | None = None,
-) -> DataFrame:
-    """(id, [carry...], bucket) — one row per hashed unigram/bigram
-    feature occurrence. posexplode + lead window, not array HOFs: the
-    codegen formulation (see module docstring)."""
-    carry = carry or []
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    ex = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in carry],
-        F.posexplode(toks).alias("pos", "w"),
-    )
-    uni = ex.select("id", *carry, F.col("w").alias("feat"))
-    if bigrams:
-        w_next = W.partitionBy("id").orderBy("pos")
-        bi = (
-            ex.withColumn("w2", F.lead("w").over(w_next))
-            .filter(F.col("w2").isNotNull())
-            .select("id", *carry,
-                    F.concat_ws(_US, "w", "w2").alias("feat"))
-        )
-        uni = uni.unionByName(bi)
-    return uni.select(
-        "id", *carry,
-        _bucket(F.col("feat"), n_bins, portable_hash).alias("bucket"))
 
 
 def train_quality_classifier(
@@ -164,115 +115,67 @@ def train_quality_classifier(
     label: F.Column,
     n_bins: int = 1024,
     bigrams: bool = True,
-    portable_hash: bool = False,
 ) -> HashedNgramNb:
     """Fit the NB log-odds weights on ``df`` (the labeled reference slice
     — e.g. curated-corpus rows vs raw-crawl rows, the fastText quality
-    setup; here any boolean ``label`` Column). Cost: one feature explode
-    over the slice, one groupBy(bucket) aggregate, one tiny totals/prior
-    aggregate (``.first()`` on a 1-row frame). Both classes must be
-    non-empty."""
+    setup; here any boolean ``label`` Column). Both classes must be
+    non-empty.
+
+    One action total: the Arrow pass (:func:`_train_counts_arrow`) folds
+    the doc-count prior into the same per-batch partial maps (bucket -1,
+    never a real md5 bucket), the <= n_bins+1 count rows collect, and the
+    weight table is BUILT driver-side as a local relation — so scoring
+    never re-materializes the training lineage, and the table needs no
+    cache."""
     labeled = df.filter(F.col(text_col).isNotNull()).withColumn(
         "__pos", label.cast("boolean"))
-    if portable_hash:
-        # one action total: the Arrow pass folds the doc-count prior into
-        # the same per-batch partial maps (bucket -1, never a real md5
-        # bucket), the <= n_bins+1 count rows collect, and the weight
-        # table is BUILT driver-side as a local relation — so scoring
-        # never re-materializes the training lineage (the old shape ran
-        # the training pass once for the totals action and AGAIN when the
-        # first scoring action materialized the persisted weights)
-        count_rows = _train_counts_arrow(
-            labeled, text_col, n_bins, bigrams).collect()
-        np_ = nn_ = tp_i = tn_i = 0
-        buckets = []
-        for r in count_rows:
-            if r["bucket"] < 0:
-                np_, nn_ = r["cp"], r["cn"]
-            else:
-                buckets.append((r["bucket"], r["cp"], r["cn"]))
-                tp_i += r["cp"]
-                tn_i += r["cn"]
-        if not np_ or not nn_:
-            raise ValueError(
-                "train_quality_classifier: both classes must be non-empty, "
-                f"got pos={np_} neg={nn_}")
-        tp, tn = float(tp_i), float(tn_i)
-        wmap = {
-            b: math.log((cp + 1.0) / (tp + n_bins))
-            - math.log((cn + 1.0) / (tn + n_bins))
-            for b, cp, cn in buckets
-        }
-        # scoped: a bare persist() leaked one CacheManager entry per
-        # training call for the life of the session (ops/util.py)
-        weights = scoped_persist(
-            labeled.sparkSession.createDataFrame(
-                list(wmap.items()), schema="bucket long, wt double"),
-            "quality_clf.weights.portable")
-        prior_np, prior_nn = np_, nn_
-    else:
-        feats = _doc_buckets(
-            labeled, id_col, text_col, n_bins, bigrams, portable_hash,
-            carry=["__pos"])
-        counts = feats.groupBy("bucket").agg(
-            F.sum(F.when(F.col("__pos"), 1).otherwise(0)).alias("cp"),
-            F.sum(F.when(~F.col("__pos"), 1).otherwise(0)).alias("cn"),
-        )
-        tot = counts.agg(
-            F.sum("cp").alias("tp"), F.sum("cn").alias("tn")).first()
-        prior = labeled.agg(
-            F.sum(F.when(F.col("__pos"), 1).otherwise(0)).alias("np"),
-            F.sum(F.when(~F.col("__pos"), 1).otherwise(0)).alias("nn"),
-        ).first()
-        if not prior["np"] or not prior["nn"]:
-            raise ValueError(
-                "train_quality_classifier: both classes must be non-empty, "
-                f"got pos={prior['np']} neg={prior['nn']}")
-        tp = float(tot["tp"] or 0)
-        tn = float(tot["tn"] or 0)
-        # persist: the table is <= n_bins rows, but its LINEAGE is the
-        # whole training explode — without this, every scoring action
-        # (and every branch that reuses the model) re-runs training.
-        # scoped: a bare persist() leaked the entry for the session AND
-        # let a LATER training call plan-match into this one's stale
-        # blocks instead of re-reading its inputs (ops/util.py); training
-        # a new model retires the previous model's cache (its weights
-        # recompute from lineage if still referenced).
-        weights = scoped_persist(
-            counts.select(
-                "bucket",
-                (F.log((F.col("cp") + F.lit(1.0)) / F.lit(tp + n_bins))
-                 - F.log((F.col("cn") + F.lit(1.0)) / F.lit(tn + n_bins))
-                 ).alias("wt"),
-            ),
-            "quality_clf.weights")
-        prior_np, prior_nn = prior["np"], prior["nn"]
+    count_rows = _train_counts_arrow(
+        labeled, text_col, n_bins, bigrams).collect()
+    np_ = nn_ = tp_i = tn_i = 0
+    buckets = []
+    for r in count_rows:
+        if r["bucket"] < 0:
+            np_, nn_ = r["cp"], r["cn"]
+        else:
+            buckets.append((r["bucket"], r["cp"], r["cn"]))
+            tp_i += r["cp"]
+            tn_i += r["cn"]
+    if not np_ or not nn_:
+        raise ValueError(
+            "train_quality_classifier: both classes must be non-empty, "
+            f"got pos={np_} neg={nn_}")
+    tp, tn = float(tp_i), float(tn_i)
+    wmap = {
+        b: math.log((cp + 1.0) / (tp + n_bins))
+        - math.log((cn + 1.0) / (tn + n_bins))
+        for b, cp, cn in buckets
+    }
+    weights = labeled.sparkSession.createDataFrame(
+        list(wmap.items()), schema="bucket long, wt double")
     default_w = (math.log(1.0 / (tp + n_bins))
                  - math.log(1.0 / (tn + n_bins)))
-    bias = math.log(prior_np / prior_nn)
     return HashedNgramNb(
-        weights=weights, default_w=default_w, bias=bias,
-        n_bins=n_bins, bigrams=bigrams, portable_hash=portable_hash,
-        wmap=wmap if portable_hash else None)
+        weights=weights, wmap=wmap, default_w=default_w,
+        bias=math.log(np_ / nn_), n_bins=n_bins, bigrams=bigrams)
 
 
 def _train_counts_arrow(
     labeled: DataFrame, text_col: str, n_bins: int, bigrams: bool
 ) -> DataFrame:
-    """Per-bucket (cp, cn) training counts on the portable-hash Arrow fast
-    path: one ``mapInPandas`` pass emits PER-BATCH partial count maps (at
-    most ``n_bins`` rows each), so the only shuffle carries a few thousand
-    pre-aggregated rows instead of one row per feature occurrence — and
-    the posexplode + per-doc lead-window sort (a full shuffle of the
-    exploded slice, just to form bigrams) disappears. Counts are exact
-    integers, bit-identical to the expression path's groupBy. The class
-    prior's labeled-doc counts ride along as one ``bucket = -1`` row per
-    batch (a real md5 bucket is never negative), so training needs no
-    second scan of the slice.
+    """Per-bucket (cp, cn) training counts: one ``mapInPandas`` pass emits
+    PER-BATCH partial count maps (at most ``n_bins`` rows each), so the
+    only shuffle carries a few thousand pre-aggregated rows instead of one
+    row per feature occurrence — and the posexplode + per-doc lead-window
+    sort an expression formulation needs (a full shuffle of the exploded
+    slice, just to form bigrams) never happens. Counts are exact integers,
+    bit-identical to the expression chain's groupBy. The class prior's
+    labeled-doc counts ride along as one ``bucket = -1`` row per batch (a
+    real md5 bucket is never negative), so training needs no second scan
+    of the slice.
 
-    NULL labels: the expression path counts such rows' features in NEITHER
-    class but still mints their (0, 0) bucket rows, whose weight equals
-    the COALESCE smoothing floor — dropping the rows entirely (done here)
+    NULL labels: the expression chain counts such rows' features in
+    NEITHER class but still mints their (0, 0) bucket rows, whose weight
+    equals the smoothing floor — dropping the rows entirely (done here)
     changes nothing but which side computes ln(1/(t + n_bins))."""
 
     def run(batches):
@@ -323,7 +226,6 @@ def dsir_importance(
     raw: DataFrame,
     n_bins: int = 1024,
     bigrams: bool = True,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling", NeurIPS — published):
@@ -336,8 +238,8 @@ def dsir_importance(
     prior: fit :func:`train_quality_classifier` on target-as-positive /
     raw-as-negative (ids are namespaced ``t:``/``r:`` so the two samples
     can overlap), then ``log_w = logit - bias``. Same cost shape: one
-    sample-bounded training aggregate, one corpus explode + broadcast
-    weight join + per-doc sum. Feed the result to :func:`dsir_select`."""
+    sample-bounded training aggregate, one corpus scoring pass + per-doc
+    merge. Feed the result to :func:`dsir_select`."""
     tagged = (
         target.filter(F.col(text_col).isNotNull()).select(
             F.concat(F.lit("t:"), F.col(id_col).cast("string")).alias("id"),
@@ -348,7 +250,7 @@ def dsir_importance(
     )
     model = train_quality_classifier(
         tagged, "id", "text", F.col("__pos"),
-        n_bins=n_bins, bigrams=bigrams, portable_hash=portable_hash)
+        n_bins=n_bins, bigrams=bigrams)
     return quality_scores(df, id_col, text_col, model).select(
         "id", "n_feats",
         (F.col("logit") - F.lit(model.bias)).alias("log_w"))
@@ -360,7 +262,6 @@ def dsir_select(
     id_col: str = "id",
     log_w_col: str = "log_w",
     salt: str = "dsir",
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Gumbel-top-k importance RESAMPLING (the DSIR selection step):
     keep the ``k`` documents with the largest ``log_w + Gumbel`` key —
@@ -368,25 +269,16 @@ def dsir_select(
     probability proportional to ``exp(log_w)`` (the Gumbel-max trick),
     which preserves diversity where a plain top-k would collapse onto
     near-duplicates of the target sample. The noise is DETERMINISTIC:
-    ``g = -ln(-ln(u))`` with ``u`` derived from hash(id, salt), so the
-    selection is a pure function of the data (layout-invariant, replayable
-    — and SQL-replayable under ``portable_hash``, the sampling-module
-    convention). Returns the selected rows with ``gumbel_key`` attached.
+    ``g = -ln(-ln(u))`` with ``u`` derived from the 60-bit md5 of
+    ``id <0x1f> salt``, so the selection is a pure function of the data
+    (layout-invariant and SQL-replayable, the sampling-module convention).
+    Returns the selected rows with ``gumbel_key`` attached.
 
     Scale: the key is one hash + two ``ln`` per row, and the global top-k
     is ``orderBy(...).limit(k)`` — Spark's TakeOrderedAndProject, a
     per-partition heap + driver merge of k rows, never a global sort."""
-    if portable_hash:
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat_ws(
-                    chr(31), F.col(id_col).cast("string"), F.lit(salt))),
-                1, 15),
-            16, 10,
-        ).cast("long")
-    else:
-        h = F.xxhash64(F.col(id_col).cast("string"), F.lit(salt))
-        h = F.pmod(h, F.lit(1 << 60))
+    h = md5_bits(
+        F.concat_ws(chr(31), F.col(id_col).cast("string"), F.lit(salt)), 15)
     # u in (0, 1]: +1 avoids ln(0); the 60-bit ceiling keeps u <= 1.
     # Integer add BEFORE the double cast, so an external engine computing
     # CAST(h + 1 AS DOUBLE) lands on the identical double.
@@ -484,50 +376,26 @@ def quality_scores(
     id_col: str,
     text_col: str,
     model: HashedNgramNb,
-    broadcast_weights: bool = True,
 ) -> DataFrame:
     """Score every document: ``(id, n_feats, logit, prob)``. Documents
     with NULL text emit no row (the heuristic token gate owns them —
     lm_cross_entropy precedent). ``prob`` is the positive-class sigmoid;
-    gate with ``prob >= threshold``."""
-    if model.portable_hash:
-        return _quality_scores_arrow(df, id_col, text_col, model)
-    maybe_b = F.broadcast if broadcast_weights else (lambda x: x)
-    feats = _doc_buckets(
-        df, id_col, text_col, model.n_bins, model.bigrams,
-        model.portable_hash)
-    joined = feats.join(maybe_b(model.weights), "bucket", "left")
-    logit = F.lit(model.bias) + F.sum(
-        F.coalesce(F.col("wt"), F.lit(model.default_w)))
-    return joined.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_feats"),
-        logit.alias("logit"),
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias("prob"),
-    )
+    gate with ``prob >= threshold``.
 
+    No feature explosion: an expression formulation explodes every
+    unigram/bigram occurrence, shuffles the exploded frame TWICE (per-doc
+    lead window for bigrams, then groupBy(id)) and runs one md5 → conv
+    chain per occurrence. Here one Arrow-batched pandas_udf computes each
+    document's (n_feats, logit) against the model's weight map (at most
+    ``n_bins`` rows), so per-doc rows never widen and the only shuffle is
+    the duplicate-id merge over one narrow row per document.
 
-def _quality_scores_arrow(
-    df: DataFrame, id_col: str, text_col: str, model: HashedNgramNb
-) -> DataFrame:
-    """Portable-hash scoring without the feature explosion: the expression
-    path exploded every unigram/bigram occurrence, shuffled the exploded
-    frame TWICE (per-doc lead window for bigrams, then groupBy(id)) and
-    ran one md5 → conv chain per occurrence. Here one Arrow-batched
-    pandas_udf computes each document's (n_feats, logit) against the
-    collected weight map (at most ``n_bins`` rows — bounded, and already
-    persisted by training), so per-doc rows never widen and the only
-    shuffle is the duplicate-id merge over one narrow row per document.
-
-    The merge reconstructs the expression path's semantics exactly:
-    grouped docs pool their features, and each row's partial carries NO
-    bias term, so logit = bias + sum(partials) on any grouping. Float
-    sums reassociate (Spark's own groupBy order was already
-    partition-dependent); pinned within 1e-9 by
-    test_arrow_portable_path_matches_expression_chain."""
-    wmap = model.wmap if model.wmap is not None else {
-        int(r["bucket"]): float(r["wt"]) for r in model.weights.collect()
-    }
-    bias, default_w = model.bias, model.default_w
+    The merge reconstructs the expression semantics exactly: grouped docs
+    pool their features, and each row's partial carries NO bias term, so
+    logit = bias + sum(partials) on any grouping. Float sums reassociate
+    (Spark's own groupBy order is partition-dependent too); pinned within
+    1e-9 by test_arrow_portable_path_matches_expression_chain."""
+    wmap, bias, default_w = model.wmap, model.bias, model.default_w
     n_bins, bigrams = model.n_bins, model.bigrams
 
     # feat-string -> weight memo, shared across a task's batches via the

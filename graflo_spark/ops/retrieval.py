@@ -42,14 +42,13 @@ differ (1-ulp wobble), so ranking orders by ``round(score, round_scores)``
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from graflo_spark.ops.textstats import tokens_expr  # the ONE tokenizer
-from graflo_spark.ops.util import scoped_persist
+from graflo_spark.ops.util import md5_bits, py_md5_bits, scoped_persist
 
 __all__ = [
     "tokens_expr", "term_bucket", "py_term_bucket", "build_postings",
@@ -67,17 +66,13 @@ def term_bucket(term: Column, n_buckets: int) -> Column:
     compute the buckets to prune to without touching the cluster; any
     engine with md5 replays it. The digest costs once per POSTING at index
     build, never on the probe path."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(_SEP, term, F.lit("lexidx"))), 1, 15),
-        16, 10,
-    ).cast("long")
+    h = md5_bits(F.concat_ws(_SEP, term, F.lit("lexidx")), 15)
     return F.pmod(h, F.lit(n_buckets))
 
 
 def py_term_bucket(term: str, n_buckets: int) -> int:
     """Driver-side twin of :func:`term_bucket`."""
-    digest = hashlib.md5(f"{term}{_SEP}lexidx".encode()).hexdigest()
-    return int(digest[:15], 16) % n_buckets
+    return py_md5_bits(f"{term}{_SEP}lexidx", 15) % n_buckets
 
 
 def _bm25_term_score(tf: Column, df: Column, dl: Column, n: Column,

@@ -5,8 +5,9 @@ input (or rerun after AQE picks a different layout) and the sample changes.
 Training-data pipelines need sampling that is a pure function of the ROW, so
 the same document lands in the same split on every run, on any cluster
 layout, and a re-ingested corpus reproduces its train/val/test membership
-exactly. Everything here keys on ``xxhash64(id, salt)``: one JVM-side hash
-per row, no shuffle, no state.
+exactly. Everything here keys on the package's 60-bit md5 of
+``id <0x1f> salt`` (``ops/util.md5_bits``): one hash per row, no shuffle,
+no state — and any engine with md5 reproduces membership bit for bit.
 """
 
 from __future__ import annotations
@@ -14,34 +15,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graflo_spark.ops.util import md5_bits
+
 # hash buckets per unit of rate resolution: rates are exact to 1e-6
 _RESOLUTION = 1_000_000
 
 
-def _bucket(id_col: str, salt: str, portable_hash: bool = False) -> F.Column:
-    """Stable bucket in [0, _RESOLUTION) — a pure function of (id, salt).
-
-    ``portable_hash`` swaps xxhash64 for the md5-derived 60-bit hash the
-    rest of the package uses for SQL-oracle parity (winnowing convention:
-    first 15 hex chars of md5 over ``id <0x1f> salt``) — any engine with
-    md5 reproduces membership bit-for-bit. Production keeps xxhash64 (one
-    JVM intrinsic vs an md5 digest per row)."""
-    if portable_hash:
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat_ws(
-                    chr(31), F.col(id_col).cast("string"), F.lit(salt))),
-                1, 15),
-            16, 10,
-        ).cast("long")
-    else:
-        h = F.xxhash64(F.col(id_col).cast("string"), F.lit(salt))
+def _bucket(id_col: str, salt: str) -> F.Column:
+    """Stable bucket in [0, _RESOLUTION) — a pure function of (id, salt)."""
+    h = md5_bits(
+        F.concat_ws(chr(31), F.col(id_col).cast("string"), F.lit(salt)), 15)
     return F.pmod(h, F.lit(_RESOLUTION))
 
 
 def hash_sample(
     df: DataFrame, id_col: str, rate: float, salt: str = "sample",
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Keep ~``rate`` of rows, deterministically by id: the same id is kept
     or dropped on EVERY run regardless of partitioning, cluster size, or
@@ -49,8 +37,7 @@ def hash_sample(
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0, 1], got {rate}")
     # round, not truncate: int(0.7 * 1e6) is 699999 under binary floats
-    return df.filter(
-        _bucket(id_col, salt, portable_hash) < round(rate * _RESOLUTION))
+    return df.filter(_bucket(id_col, salt) < round(rate * _RESOLUTION))
 
 
 def hash_split(
@@ -59,7 +46,6 @@ def hash_split(
     weights: dict[str, float],
     salt: str = "split",
     split_col: str = "split",
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Assign every row to exactly one named split (e.g. train/val/test) by
     hash range — disjoint, exhaustive, and reproducible: membership is a
@@ -72,7 +58,7 @@ def hash_split(
     total = sum(weights.values())
     if abs(total - 1.0) > 1e-6:
         raise ValueError(f"split weights must sum to 1, got {total}")
-    b = _bucket(id_col, salt, portable_hash)
+    b = _bucket(id_col, salt)
     expr = None
     acc = 0.0
     names = list(weights)
@@ -197,7 +183,6 @@ def mix_corpora(
     id_col: str,
     salt: str = "mix",
     source_col: str = "source_name",
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Blend corpora to target proportions by deterministic downsampling —
     the dataset-mixing step of a pretraining pipeline (e.g. 70% web, 20%
@@ -230,8 +215,7 @@ def mix_corpora(
     for name, df in sources.items():
         rate = min(1.0, target_total * norm[name] / counts[name])
         parts.append(
-            hash_sample(df, id_col, rate, salt=f"{salt}:{name}",
-                        portable_hash=portable_hash).withColumn(
+            hash_sample(df, id_col, rate, salt=f"{salt}:{name}").withColumn(
                 source_col, F.lit(name)
             )
         )

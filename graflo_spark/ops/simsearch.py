@@ -362,7 +362,6 @@ def assign_to_centroids(
     centroids: list,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    use_arrow: bool = True,
 ) -> IvfIndex:
     """Assignment-only IVF index over FROZEN centroids (no KMeans fit):
     each vector goes to its argmin squared-L2 centroid, ties to the
@@ -371,29 +370,28 @@ def assign_to_centroids(
     the same doubles in the same order (what lets a SQL oracle replay it
     exactly).
 
-    Two equivalent formulations (pinned bit-identical by
-    test_assign_arrow_matches_expression_path):
-
-    - ``use_arrow=True`` (default): one Arrow-batched ``mapInPandas``
-      whose per-dimension loop accumulates ``(x_i - c_i)^2`` left to
-      right — the same sequential float64 fold. ``zip_with`` /
-      ``aggregate`` higher-order functions are CodegenFallback
-      (interpreted per row), and with k centroids the expression tree
-      carries k copies of the 2·dim-literal fold — measured plan
-      construction alone at ~0.5 s for 8x64 (r14); the Arrow path is the
-      LSH-batch precedent applied here. Degenerate rows (NULL vector,
-      length != dim, NULL element) assign to cluster 0 — exactly what
-      the expression path's NULL-propagating fold + struct-least yields
-      (probe-verified, including NaN/Inf elements where numpy argmin's
-      first-minimum matches struct-least's smallest-c tie-break).
-    - ``use_arrow=False``: the original expression formulation, kept as
-      the documented algebraic form and the equality test's referee.
+    One Arrow-batched ``mapInPandas`` whose per-dimension loop
+    accumulates ``(x_i - c_i)^2`` left to right — the same sequential
+    float64 fold as the ``zip_with`` + ``aggregate`` + struct-``least``
+    expression form (pinned bit-identical by
+    test_assign_arrow_matches_expression_path). Those higher-order
+    functions are CodegenFallback (interpreted per row), and with k
+    centroids the expression tree carries k copies of the 2·dim-literal
+    fold — measured plan construction alone at ~0.5 s for 8x64 (r14); the
+    Arrow pass is the LSH-batch precedent applied here. Degenerate rows
+    (NULL vector, length != dim, NULL element) assign to cluster 0 —
+    exactly what the expression form's NULL-propagating fold +
+    struct-least yields (probe-verified, including NaN/Inf elements where
+    numpy argmin's first-minimum matches struct-least's smallest-c
+    tie-break).
 
     Use cases: re-assigning a new corpus slice to an EXISTING index's
     centroids without refitting (the incremental-ingest path at 100 TB —
     KMeans cost is a one-off, arrivals are a map pass), and deterministic
     frozen-constant verification (``catalog.semdedup_clusters_embeddings``).
     """
+    import numpy as np
+
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
         F.col(corpus_vec).cast("array<double>").alias("c_vec"),
@@ -402,56 +400,40 @@ def assign_to_centroids(
         [(i, [float(x) for x in cent]) for i, cent in enumerate(centroids)],
         "cluster INT, centroid ARRAY<DOUBLE>",
     )
-    if use_arrow:
-        import numpy as np
+    cmat = np.asarray(
+        [[float(x) for x in cent] for cent in centroids],
+        dtype=np.float64)
+    dim = cmat.shape[1]
+    out_schema = T.StructType(
+        list(c.schema.fields)
+        + [T.StructField("cluster", T.IntegerType())])
 
-        cmat = np.asarray(
-            [[float(x) for x in cent] for cent in centroids],
-            dtype=np.float64)
-        dim = cmat.shape[1]
-        out_schema = T.StructType(
-            list(c.schema.fields)
-            + [T.StructField("cluster", T.IntegerType())])
-
-        def run(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if not n:
+    def run(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if not n:
+                continue
+            clusters = np.zeros(n, dtype=np.int32)
+            good_pos, good_vecs = [], []
+            for i, v in enumerate(pdf["c_vec"]):
+                if v is None:
                     continue
-                clusters = np.zeros(n, dtype=np.int32)
-                good_pos, good_vecs = [], []
-                for i, v in enumerate(pdf["c_vec"]):
-                    if v is None:
-                        continue
-                    a = np.asarray(v, dtype=np.float64)
-                    if a.shape == (dim,):
-                        good_pos.append(i)
-                        good_vecs.append(a)
-                if good_pos:
-                    x = np.stack(good_vecs)
-                    d2 = np.zeros((len(good_pos), cmat.shape[0]))
-                    for j in range(dim):
-                        diff = x[:, j, None] - cmat[None, :, j]
-                        d2 += diff * diff
-                    clusters[good_pos] = d2.argmin(axis=1)
-                out = pdf.copy()
-                out["cluster"] = clusters
-                yield out
+                a = np.asarray(v, dtype=np.float64)
+                if a.shape == (dim,):
+                    good_pos.append(i)
+                    good_vecs.append(a)
+            if good_pos:
+                x = np.stack(good_vecs)
+                d2 = np.zeros((len(good_pos), cmat.shape[0]))
+                for j in range(dim):
+                    diff = x[:, j, None] - cmat[None, :, j]
+                    d2 += diff * diff
+                clusters[good_pos] = d2.argmin(axis=1)
+            out = pdf.copy()
+            out["cluster"] = clusters
+            yield out
 
-        assigned = c.mapInPandas(run, schema=out_schema)
-        return IvfIndex(assigned=assigned, centroids=centroids_df)
-    structs = []
-    for i, cent in enumerate(centroids):
-        lit = F.lit([float(x) for x in cent])
-        d2 = F.aggregate(
-            F.zip_with(F.col("c_vec"), lit, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        structs.append(F.struct(d2.alias("d"), F.lit(i).alias("c")))
-    best = F.least(*structs) if len(structs) > 1 else structs[0]
-    assigned = c.select(
-        "neighbor_id", "c_vec", best["c"].cast("int").alias("cluster"))
+    assigned = c.mapInPandas(run, schema=out_schema)
     return IvfIndex(assigned=assigned, centroids=centroids_df)
 
 

@@ -355,43 +355,33 @@ def winnowing_fingerprints(
     text_col: str,
     k: int = 7,
     window: int = 4,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (the rolling-hash scheme of MOSS):
     hash every k-gram, slide a window of ``window`` consecutive hashes, keep
     each window's min — the distinct mins are the fingerprint set. Guarantees
     any shared run of length >= k + window - 1 produces a shared fingerprint.
-
-    ``portable_hash`` swaps xxhash64 for a 60-bit md5-derived hash that a
-    SQL oracle (DuckDB ``('0x'||substr(md5(g),1,15))::BIGINT``) reproduces
-    exactly — slower, for cross-engine verification; the default stays the
-    fast path.
+    Grams hash with ``md5_bits(g, 15)``, the 60-bit md5 a SQL oracle
+    (DuckDB ``('0x'||substr(md5(g),1,15))::BIGINT``) reproduces exactly.
 
     Shape: explode k-grams -> one hash per gram -> window-min over
     position (one shuffle on doc id) -> distinct. Returns ``(id, fp)``
     rows. A zero-shuffle higher-order-function formulation
     (``transform`` + ``array_min(slice(...))`` + ``array_distinct``) was
-    measured against this one at sf0.1 and LOST 10-20x (5.1 s -> 22.9 s
-    production hash, 1.7 s -> 37.2 s portable): HOF lambdas evaluate
-    interpreted per element while this path keeps the hash and the
-    window-frame min inside generated code — the same codegen-beats-HOF
-    result the MinHash signature aggregate measured at 100x. The shuffle
-    it pays is the cheap part."""
+    measured against this one at sf0.1 and LOST ~20x (1.7 s -> 37.2 s):
+    HOF lambdas evaluate interpreted per element while this path keeps the
+    hash and the window-frame min inside generated code — the same
+    codegen-beats-HOF result the MinHash signature aggregate measured at
+    100x. The shuffle it pays is the cheap part."""
     from pyspark.sql import Window as W
 
     from graflo_spark.ops.dedup import char_shingles
-    from graflo_spark.ops.util import ensure_min_parallelism
+    from graflo_spark.ops.util import ensure_min_parallelism, md5_bits
 
     grams = ensure_min_parallelism(df).select(
         F.col(id_col).alias("id"),
         F.posexplode(char_shingles(F.col(text_col), k)).alias("pos", "g"),
     )
-    h = (
-        F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("long")
-        if portable_hash
-        else F.xxhash64("g")
-    )
-    hashed = grams.select("id", "pos", h.alias("h"))
+    hashed = grams.select("id", "pos", md5_bits("g", 15).alias("h"))
     w = W.partitionBy("id").orderBy("pos").rowsBetween(0, window - 1)
     return (
         hashed.withColumn("fp", F.min("h").over(w))

@@ -2,12 +2,34 @@
 
 from __future__ import annotations
 
+import hashlib
 import threading
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 _SCOPED_CACHE: dict[str, DataFrame] = {}
 _SCOPED_LOCK = threading.Lock()
+
+
+def md5_bits(col: Column | str, hex_chars: int) -> Column:
+    """The package's one content hash: the first ``hex_chars`` hex digits
+    of ``md5(col)`` (UTF-8 bytes) as a non-negative long — 8 digits give
+    32-bit keys (shingles, LSH bands, SimHash tokens), 15 give 60-bit keys
+    (lines, grams, sampling, DSIR, quality buckets, term buckets). Any
+    engine with md5 replays it bit for bit (DuckDB
+    ``('0x' || substr(md5(x), 1, n))::BIGINT``), which is what lets the
+    oracle gate grade every hashing operator. NULL in, NULL out.
+    :func:`py_md5_bits` is the driver/Arrow-side twin."""
+    return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("long")
+
+
+def py_md5_bits(s: str | None, hex_chars: int) -> int | None:
+    """Python twin of :func:`md5_bits` (hashlib and the JVM md5 agree byte
+    for byte)."""
+    if s is None:
+        return None
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:hex_chars], 16)
 
 
 def scoped_persist(df: DataFrame, scope: str) -> DataFrame:

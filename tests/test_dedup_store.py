@@ -283,8 +283,7 @@ def test_minhash_portable_arrow_matches_expression_chain(spark):
 
     got = {r["id"]: list(r["sig"])
            for r in dd.minhash_signatures(
-               df, "doc_id", "text", shingle_k=5, num_perm=16,
-               portable_hash=True).collect()}
+               df, "doc_id", "text", shingle_k=5, num_perm=16).collect()}
 
     # the former expression chain, inlined verbatim
     shingled = df.select(

@@ -41,14 +41,13 @@ def _brute_spans(docs: dict, k: int, exclude_first: bool):
     return out
 
 
-def _got(spark, docs, k, exclude_first=False, portable=False):
+def _got(spark, docs, k, exclude_first=False):
     df = spark.createDataFrame(
         sorted(docs.items()), "doc_id long, text string")
     return {
         (r["id"], r["span_start"], r["span_end"], r["span_tokens"])
         for r in duplicated_substring_spans(
-            df, k=k, exclude_first_occurrence=exclude_first,
-            portable_hash=portable).collect()
+            df, k=k, exclude_first_occurrence=exclude_first).collect()
     }
 
 
@@ -93,14 +92,12 @@ def test_random_corpus_matches_brute_force(spark):
             assert _got(spark, docs, k, excl) == _brute_spans(docs, k, excl)
 
 
-def test_portable_hash_same_result_and_degenerates(spark):
+def test_degenerate_inputs_and_within_doc_repetition(spark):
     docs = {0: "a b c d a b c d", 1: None, 2: "   ", 3: "short"}
-    got_fast = _got(spark, docs, k=3)
-    got_portable = _got(spark, docs, k=3, portable=True)
-    assert got_fast == got_portable
-    # within-doc repetition: "a b c" at 0 and 4, "b c d" at 1 and 5 ->
-    # covers 0..3 and 4..7 -> one maximal span over the whole doc
-    assert got_fast == {(0, 0, 7, 8)}
+    # NULL, blank and shorter-than-k docs emit nothing; within-doc
+    # repetition: "a b c" at 0 and 4, "b c d" at 1 and 5 -> covers 0..3
+    # and 4..7 -> one maximal span over the whole doc
+    assert _got(spark, docs, k=3) == {(0, 0, 7, 8)}
 
 
 def test_cut_spans_keeps_one_copy_corpus_wide(spark):

@@ -28,12 +28,11 @@ def test_dedup_lines_keeps_first_occurrence_corpus_wide(spark):
 
 
 def test_dedup_lines_portable_matches_production_hash(spark):
+    """The md5 line hash reproduces the pure-Python reference exactly."""
     docs = [(i, f"line a\nline {i % 3}\nline b") for i in range(12)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     fast = {r["doc_id"]: r["text"] for r in dedup_lines(df).collect()}
-    port = {r["doc_id"]: r["text"]
-            for r in dedup_lines(df, portable_hash=True).collect()}
-    assert fast == port
+    assert fast == _brute_dedup_lines(dict(docs))
     # owner semantics: doc 0 keeps everything, doc 1 and 2 keep only their
     # first-novel middle line, docs 3+ keep nothing
     assert fast[0] == "line a\nline 0\nline b"

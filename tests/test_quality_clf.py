@@ -6,6 +6,7 @@ import hashlib
 import math
 
 import pytest
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from graflo_spark.ops.quality_clf import (
@@ -80,7 +81,7 @@ def test_scores_match_pure_python_reimplementation(spark):
     df = _df(spark)
     model = train_quality_classifier(
         df.filter(F.col("doc_id").isin(list(TRAIN))),
-        "doc_id", "text", F.col("is_en"), n_bins=64, portable_hash=True)
+        "doc_id", "text", F.col("is_en"), n_bins=64)
     got = {r["id"]: (r["n_feats"], r["logit"], r["prob"])
            for r in quality_scores(df, "doc_id", "text", model).collect()}
     want = _brute(DOCS, TRAIN, POS, n_bins=64)
@@ -95,7 +96,7 @@ def test_classifier_separates_the_classes(spark):
     df = _df(spark)
     model = train_quality_classifier(
         df.filter(F.col("doc_id").isin(list(TRAIN))),
-        "doc_id", "text", F.col("is_en"), n_bins=64, portable_hash=True)
+        "doc_id", "text", F.col("is_en"), n_bins=64)
     probs = {r["id"]: r["prob"]
              for r in quality_scores(df, "doc_id", "text", model).collect()}
     # held-out docs with training-vocabulary overlap score on the right
@@ -115,7 +116,7 @@ def test_scores_invariant_under_repartition(spark):
     df = _df(spark)
     model = train_quality_classifier(
         df.filter(F.col("doc_id").isin(list(TRAIN))),
-        "doc_id", "text", F.col("is_en"), n_bins=64, portable_hash=True)
+        "doc_id", "text", F.col("is_en"), n_bins=64)
     a = {r["id"]: round(r["logit"], 9)
          for r in quality_scores(df, "doc_id", "text", model).collect()}
     b = {r["id"]: round(r["logit"], 9)
@@ -137,8 +138,7 @@ def test_null_text_emits_no_row_and_unseen_buckets_use_floor(spark):
     # asserted exactly
     model = train_quality_classifier(
         df.filter(F.col("doc_id").isin(list(TRAIN))),
-        "doc_id", "text", F.col("is_en"), n_bins=1 << 20,
-        portable_hash=True)
+        "doc_id", "text", F.col("is_en"), n_bins=1 << 20)
     extra = spark.createDataFrame(
         [(100, None, True), (101, "zzzz qqqq wwww", True)],
         ["doc_id", "text", "is_en"])
@@ -165,14 +165,37 @@ WS_EDGE_DOCS = [
 ]
 
 
+def _doc_buckets(df, id_col, text_col, n_bins, bigrams, carry=None):
+    """The expression formulation of feature bucketing, replayed verbatim:
+    (id, [carry...], bucket) — one row per md5-hashed unigram/bigram
+    occurrence via posexplode + lead window."""
+    carry = carry or []
+    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    ex = df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("id"),
+        *[F.col(c) for c in carry],
+        F.posexplode(toks).alias("pos", "w"),
+    )
+    uni = ex.select("id", *carry, F.col("w").alias("feat"))
+    if bigrams:
+        w_next = W.partitionBy("id").orderBy("pos")
+        bi = (
+            ex.withColumn("w2", F.lead("w").over(w_next))
+            .filter(F.col("w2").isNotNull())
+            .select("id", *carry,
+                    F.concat_ws(US, "w", "w2").alias("feat"))
+        )
+        uni = uni.unionByName(bi)
+    h = F.conv(F.substring(F.md5("feat"), 1, 15), 16, 10).cast("long")
+    return uni.select("id", *carry, F.pmod(h, F.lit(n_bins)).alias("bucket"))
+
+
 def _expression_scores(df, id_col, text_col, model):
     """The pre-r14 expression formulation of quality_scores, replayed
-    verbatim (portable hash): posexplode + lead-window bigrams + md5
-    chain + broadcast weight join + groupBy(id)."""
-    from graflo_spark.ops.quality_clf import _doc_buckets
-
+    verbatim: posexplode + lead-window bigrams + md5 chain + broadcast
+    weight join + groupBy(id)."""
     feats = _doc_buckets(
-        df, id_col, text_col, model.n_bins, model.bigrams, True)
+        df, id_col, text_col, model.n_bins, model.bigrams)
     joined = feats.join(F.broadcast(model.weights), "bucket", "left")
     logit = F.lit(model.bias) + F.sum(
         F.coalesce(F.col("wt"), F.lit(model.default_w)))
@@ -193,19 +216,16 @@ def test_arrow_portable_path_matches_expression_chain(spark):
         [(i, t, i % 2 == 0) for i, t in WS_EDGE_DOCS],
         ["doc_id", "text", "is_en"])
     model = train_quality_classifier(
-        docs, "doc_id", "text", F.col("is_en"),
-        n_bins=64, portable_hash=True)
+        docs, "doc_id", "text", F.col("is_en"), n_bins=64)
 
     # training counts: Arrow partial-count path vs the expression
     # explode+groupBy, exact integer equality per bucket
-    from graflo_spark.ops.quality_clf import _doc_buckets
-
     labeled = docs.filter(F.col("text").isNotNull()).withColumn(
         "__pos", F.col("is_en").cast("boolean"))
     expr_counts = {
         r["bucket"]: (r["cp"], r["cn"])
         for r in _doc_buckets(
-            labeled, "doc_id", "text", 64, True, True, carry=["__pos"])
+            labeled, "doc_id", "text", 64, True, carry=["__pos"])
         .groupBy("bucket").agg(
             F.sum(F.when(F.col("__pos"), 1).otherwise(0)).alias("cp"),
             F.sum(F.when(~F.col("__pos"), 1).otherwise(0)).alias("cn"))
@@ -252,8 +272,7 @@ def test_arrow_portable_duplicate_ids_pool_per_row(spark):
         [(10, "alpha beta", True), (11, "gamma delta", False)],
         ["doc_id", "text", "is_en"])
     model = train_quality_classifier(
-        train, "doc_id", "text", F.col("is_en"),
-        n_bins=64, portable_hash=True)
+        train, "doc_id", "text", F.col("is_en"), n_bins=64)
     got = {r["id"]: r for r in quality_scores(
         docs, "doc_id", "text", model).collect()}
     solo = {r["id"]: r for r in quality_scores(
@@ -307,8 +326,7 @@ def test_dsir_importance_matches_brute_and_zero_prior(spark):
 
     got = {r["id"]: (r["n_feats"], r["log_w"])
            for r in dsir_importance(
-               df, "doc_id", "text", target, raw,
-               n_bins=64, portable_hash=True).collect()}
+               df, "doc_id", "text", target, raw, n_bins=64).collect()}
     want = _brute(DOCS, {0, 1, 2, 3}, {0, 2}, n_bins=64)
     bias = math.log(2 / 2)  # equal slice sizes -> 0, kept for clarity
     for i in DOCS:
@@ -324,22 +342,20 @@ def test_dsir_select_gumbel_topk_deterministic_and_layout_invariant(spark):
     df = _df(spark)
     target = df.filter(F.col("doc_id").isin([0, 2]))
     raw = df.filter(F.col("doc_id").isin([1, 3]))
-    scored = dsir_importance(df, "doc_id", "text", target, raw,
-                             n_bins=64, portable_hash=True)
-    a = sorted(r["id"] for r in dsir_select(
-        scored, 4, portable_hash=True).collect())
+    scored = dsir_importance(df, "doc_id", "text", target, raw, n_bins=64)
+    a = sorted(r["id"] for r in dsir_select(scored, 4).collect())
     b = sorted(r["id"] for r in dsir_select(
-        scored.repartition(5), 4, portable_hash=True).collect())
+        scored.repartition(5), 4).collect())
     assert a == b and len(a) == 4
     # different salt -> (possibly) different sample, but still size k and
     # still deterministic
     c1 = sorted(r["id"] for r in dsir_select(
-        scored, 4, salt="other", portable_hash=True).collect())
+        scored, 4, salt="other").collect())
     c2 = sorted(r["id"] for r in dsir_select(
-        scored, 4, salt="other", portable_hash=True).collect())
+        scored, 4, salt="other").collect())
     assert c1 == c2 and len(c1) == 4
     # keys attach and order the selection: max key first
-    rows = dsir_select(scored, 4, portable_hash=True).collect()
+    rows = dsir_select(scored, 4).collect()
     keys = [r["gumbel_key"] for r in rows]
     assert keys == sorted(keys, reverse=True)
 
@@ -353,10 +369,8 @@ def test_dsir_resampling_prefers_high_weight_docs(spark):
     df = _df(spark)
     target = df.filter(F.col("doc_id").isin([0, 2]))
     raw = df.filter(F.col("doc_id").isin([1, 3]))
-    scored = dsir_importance(df, "doc_id", "text", target, raw,
-                             n_bins=64, portable_hash=True)
-    sel = {r["id"] for r in dsir_select(
-        scored, 4, portable_hash=True).collect()}
+    scored = dsir_importance(df, "doc_id", "text", target, raw, n_bins=64)
+    sel = {r["id"] for r in dsir_select(scored, 4).collect()}
     # english docs (POS) carry log_w ~ +5..+40, french ~ -5..-40: at
     # least 3 of the 4 picks must be english
     assert len(sel & POS) >= 3

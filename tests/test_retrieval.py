@@ -2,6 +2,7 @@
 reference, index probe == on-the-fly scoring, partition pruning on the
 persisted index, and edge cases (blank text, unseen terms)."""
 
+import hashlib
 import math
 
 import pytest
@@ -171,6 +172,26 @@ def test_portable_bucket_twins_agree(spark):
     }
     for t in terms:
         assert got[t] == rt.py_term_bucket(t, 64)
+
+
+@pytest.mark.parametrize("hex_chars", [8, 15])
+def test_md5_bits_twins_agree(spark, hex_chars):
+    """The package's one content hash: the Column form and its Python twin
+    agree bit for bit on ASCII, multi-byte unicode, empty and NULL input,
+    and both equal the first ``hex_chars`` hex digits of hashlib's md5."""
+    from graflo_spark.ops.util import md5_bits, py_md5_bits
+
+    vals = ["join", "a b\tc", "ünïcode", "中文テキスト", "emoji 🙂", "", None]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)],
+                               "i int, v string")
+    got = {r.i: r.h for r in df.select(
+        "i", md5_bits(F.col("v"), hex_chars).alias("h")).collect()}
+    for i, v in enumerate(vals):
+        assert got[i] == py_md5_bits(v, hex_chars), v
+        if v is not None:
+            want = int(hashlib.md5(v.encode()).hexdigest()[:hex_chars], 16)
+            assert got[i] == want
+    assert got[len(vals) - 1] is None
 
 
 def test_index_extend_matches_rebuild(spark, corpus):

@@ -44,22 +44,21 @@ def test_hash_split_disjoint_exhaustive_stable(spark):
         hash_split(df, "doc_id", {"a": 0.5, "b": 0.4})
 
 
-def test_portable_hash_membership_differs_only_in_hash(spark):
-    """portable_hash swaps the bucket hash (md5-60bit, SQL-replayable) but
-    keeps every contract: layout invariance, disjoint/exhaustive splits,
-    and mix proportions from the no-upsampling target."""
+def test_md5_membership_layout_invariant_split_and_mix(spark):
+    """The md5-60bit bucket (SQL-replayable) keeps every contract: layout
+    invariance, disjoint/exhaustive splits, and mix proportions from the
+    no-upsampling target."""
     from graflo_spark.ops.sampling import hash_sample, hash_split, mix_corpora
 
     df = spark.range(2000).withColumnRenamed("id", "doc_id")
-    s1 = hash_sample(df, "doc_id", 0.5, portable_hash=True)
-    s2 = hash_sample(df.repartition(13), "doc_id", 0.5, portable_hash=True)
+    s1 = hash_sample(df, "doc_id", 0.5)
+    s2 = hash_sample(df.repartition(13), "doc_id", 0.5)
     a = {r["doc_id"] for r in s1.collect()}
     b = {r["doc_id"] for r in s2.collect()}
     assert a == b  # layout-invariant
     assert abs(len(a) - 1000) < 100
 
-    sp = hash_split(df, "doc_id", {"train": 0.8, "val": 0.2},
-                    portable_hash=True)
+    sp = hash_split(df, "doc_id", {"train": 0.8, "val": 0.2})
     counts = {r["split"]: r["n"] for r in
               sp.groupBy("split").agg(__import__("pyspark").sql.functions
                                       .count("*").alias("n")).collect()}
@@ -69,7 +68,7 @@ def test_portable_hash_membership_differs_only_in_hash(spark):
     even = df.filter("doc_id % 2 = 0")
     odd = df.filter("doc_id % 2 = 1")
     mixed = mix_corpora({"e": even, "o": odd}, {"e": 0.75, "o": 0.25},
-                        "doc_id", portable_hash=True)
+                        "doc_id")
     mc = {r["source_name"]: r["n"] for r in
           mixed.groupBy("source_name").agg(
               __import__("pyspark").sql.functions.count("*").alias("n"))

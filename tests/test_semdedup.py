@@ -115,7 +115,7 @@ def test_assign_to_centroids_argmin_and_ties(spark):
 
 
 def test_assign_arrow_matches_expression_path(spark):
-    """r14: the default Arrow assignment path must agree with the
+    """r14: the Arrow assignment path must agree with the
     expression formulation (zip_with/aggregate fold + struct-least)
     ROW FOR ROW — including every degenerate shape the fold's NULL
     propagation maps to cluster 0 (NULL vector, wrong length, NULL
@@ -148,10 +148,26 @@ def test_assign_arrow_matches_expression_path(spark):
         r["neighbor_id"]: r["cluster"]
         for r in assign_to_centroids(df, cents).assigned.collect()
     }
+    # the expression formulation, inlined verbatim as the referee:
+    # per-centroid zip_with/aggregate fold + struct-least argmin
+    c = df.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("c_vec"),
+    )
+    structs = []
+    for i, cent in enumerate(cents):
+        lit = F.lit([float(x) for x in cent])
+        d2 = F.aggregate(
+            F.zip_with(F.col("c_vec"), lit, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        structs.append(F.struct(d2.alias("d"), F.lit(i).alias("c")))
+    best = F.least(*structs) if len(structs) > 1 else structs[0]
     want = {
         r["neighbor_id"]: r["cluster"]
-        for r in assign_to_centroids(
-            df, cents, use_arrow=False).assigned.collect()
+        for r in c.select(
+            "neighbor_id", best["c"].cast("int").alias("cluster")).collect()
     }
     assert got == want
     assert got[100] == got[101] == got[102] == got[103] == got[106] == 0

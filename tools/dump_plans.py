@@ -50,9 +50,8 @@ def round_plan(spark, name: str) -> str | None:
     if name == "near_dup_clusters_documents":
         docs = C.load(spark, SMALL, "documents")
         nonnull = docs.filter(F.col("text").isNotNull())
-        reps = dd._exact_text_reps(nonnull, "doc_id", "text")
-        cand = dd.minhash_lsh_candidates(
-            reps, "doc_id", "text", portable_hash=True)
+        cand = dd._candidates_from_sigs(
+            dd._rep_signatures(nonnull, "doc_id", "text"), 64, 16)
         verified = cand.filter(F.col("est_jaccard") >= 0.7).select(
             "id_a", "id_b")
         # driver_collapse_max_edges=0 forces the distributed star rounds:

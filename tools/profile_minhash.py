@@ -34,30 +34,23 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
+    def reps(df):
+        return dd._rep_signatures(
+            df.filter(F.col("text").isNotNull()), "doc_id", "text")
+
     stages = {
         "scan_documents": lambda df: df,
-        "exact_reps(sha256 groupBy)": lambda df: dd._exact_text_reps(
-            df.filter(F.col("text").isNotNull()), "doc_id", "text"),
         "signatures(arrow md5)": lambda df: dd.minhash_signatures(
-            dd._exact_text_reps(
-                df.filter(F.col("text").isNotNull()), "doc_id", "text"),
-            "doc_id", "text", portable_hash=True, unique_ids=True),
-        "banded(explode only)": lambda df: dd._banded(
-            dd.minhash_signatures(
-                dd._exact_text_reps(
-                    df.filter(F.col("text").isNotNull()), "doc_id", "text"),
-                "doc_id", "text", portable_hash=True, unique_ids=True),
-            64, 16, True),
+            df.filter(F.col("text").isNotNull()), "doc_id", "text"),
+        "rep_signatures(sig-first collapse)": reps,
+        "banded(explode only)": lambda df: dd._banded(reps(df), 64, 16),
         "candidates(full: band join+dedup+hydrate+agree)": lambda df:
-            dd.minhash_lsh_candidates(
-                dd._exact_text_reps(
-                    df.filter(F.col("text").isNotNull()), "doc_id", "text"),
-                "doc_id", "text", portable_hash=True, unique_ids=True),
+            dd._candidates_from_sigs(reps(df), 64, 16),
         "minhash_dedup(end to end)": lambda df: dd.minhash_dedup(
-            df, "doc_id", "text", threshold=0.7, portable_hash=True),
+            df, "doc_id", "text", threshold=0.7),
         "near_dup_clusters(end to end)": lambda df:
             dd.minhash_near_dup_clusters(
-                df, "doc_id", "text", threshold=0.7, portable_hash=True),
+                df, "doc_id", "text", threshold=0.7),
     }
 
     # warm once at sf0.001

@@ -505,12 +505,9 @@ def temporal_skew_bench(spark, base_dir: str, scaled_dir: str,
 
 
 def winnow_bench(spark, base_dir: str, scaled_dir: str, factor: int) -> dict:
-    """Winnowing fingerprint scaling, production vs oracle hash. The
-    driver's oracle row is forced onto the portable md5-derived hash (so
-    DuckDB can reproduce the bits); the production path is xxhash64 over
-    the same zero-shuffle HOF pipeline. Times the fingerprint projection
-    and the full substring-overlap pair join (max_df-capped) at both
-    scales for both hashes."""
+    """Winnowing fingerprint scaling on the md5 gram hash (the one DuckDB
+    reproduces). Times the fingerprint projection and the full
+    substring-overlap pair join (max_df-capped) at both scales."""
     from graflo_spark.ops.dedup import substring_overlap_pairs
     from graflo_spark.ops.textstats import winnowing_fingerprints
 
@@ -519,24 +516,20 @@ def winnow_bench(spark, base_dir: str, scaled_dir: str, factor: int) -> dict:
     for label, d in (("base", base_dir), ("scaled", scaled_dir)):
         docs = spark.read.parquet(f"{d}/documents.parquet")
         res: dict = {"rows": docs.count()}
-        for mode, portable in (("production", False), ("portable", True)):
-            t0 = pc()
-            n_fp = winnowing_fingerprints(
-                docs, "doc_id", "text", portable_hash=portable).count()
-            res[f"t_fp_{mode}"] = round(pc() - t0, 3)
-            res[f"fps_{mode}"] = n_fp
         t0 = pc()
-        n_pairs = substring_overlap_pairs(
+        res["fps"] = winnowing_fingerprints(docs, "doc_id", "text").count()
+        res["t_fp"] = round(pc() - t0, 3)
+        t0 = pc()
+        res["pairs"] = substring_overlap_pairs(
             docs, "doc_id", "text", min_shared=10, max_df=50).count()
-        res["t_pairs_production"] = round(pc() - t0, 3)
-        res["pairs"] = n_pairs
+        res["t_pairs"] = round(pc() - t0, 3)
         out[label] = res
     out["exponents"] = {
         k: (round(math.log(out["scaled"][k] / out["base"][k])
                   / math.log(factor), 3)
             if out["base"].get(k) and out["scaled"].get(k) and factor > 1
             else None)
-        for k in ("t_fp_production", "t_fp_portable", "t_pairs_production")
+        for k in ("t_fp", "t_pairs")
     }
     return out
 
