@@ -2331,16 +2331,17 @@ def embedding_near_dup_pairs(spark, sf_dir):
 # PQ/ADC replay: the codebook below was trained ONCE at sf0.01
 # (ops/pq.train_pq equivalent: per-subspace seeded Lloyd's, m=4, k_sub=8,
 # seeds 42..45) and frozen — every coordinate snapped to the 1/4096 grid so
-# the SAME value is exactly representable in the float32 the production
-# encode path uses AND the doubles DuckDB computes with. The oracle replays
+# the SAME value is exact in the float64 that ops/pq encodes and scores in
+# AND in the doubles DuckDB computes with. The oracle replays
 # the full PQ pipeline in SQL: per-subspace argmin over the literal
 # centroid tables (= pq_encode), per-query LUTs as list_inner_product
 # against the same literals, score = sum of the m looked-up parts (= ADC),
-# exact top-k with the (score desc, id asc) tie-break. Float audit (tools
-# scratch, r8): codes agree f32-vs-double with min argmin margin 1.3e-4;
+# exact top-k with the (score desc, id asc) tie-break. Float audit at
+# sf0.01 (r8, taken with float32 LUTs): min argmin margin 1.3e-4;
 # cross-engine score skew <= 1.3e-8 vs a 6e-7 minimum distance to any
-# ROUND(,4) half-boundary and a 4e-5 minimum nonzero rank gap — both
-# engines land on identical rounded doubles deterministically.
+# ROUND(,4) half-boundary and a 4e-5 minimum nonzero rank gap. With float64
+# LUTs the unrounded scores equal DuckDB's on every graded row at sf0.001
+# and sf0.01.
 _PQ_CENTS_4096 = [
     [[-61,-42,223,234,15,-171,-113,300,-315,432,-420,238,193,77,84,174],
      [264,308,-121,-328,-31,65,-186,298,286,77,-71,-193,219,-266,201,354],
@@ -2425,8 +2426,9 @@ def pq_adc_topk_embeddings(spark, sf_dir):
     graded at the n_probe == n_centroids recall-1 point, where pruning is
     a no-op and the ADC scores must equal the exact replay — what's
     verified is the IVF-PQ machinery: assignment, probe join, per-cluster
-    LUT scoring, ranking. The paths' float64 score accumulation is
-    designed to agree (ops/pq.py float64 notes)."""
+    LUT scoring, ranking. The three paths share one float64 LUT builder
+    and add the m parts in the same order, so their unrounded scores are
+    equal (tests/test_pq.py::test_pq_paths_agree_bit_for_bit)."""
     import numpy as np
 
     from graflo_spark.ops import pq as pqm

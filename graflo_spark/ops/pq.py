@@ -11,18 +11,26 @@ Spark shape:
   codebooks need ~100k vectors, not the corpus) with a deterministic
   seeded Lloyd's in numpy. Bounded by ``train_sample``.
 - **encode**: one distributed pass; an Arrow-batched ``mapInPandas`` does
-  the vectorized argmin against the broadcast codebooks (numpy einsum over
-  the batch — the sanctioned Python escape hatch, never per-row).
-- **search**: queries' LUTs travel in the task closure (tiny); each task
-  accumulates a running top-k per query ACROSS its Arrow batches and emits
-  once at iterator exhaustion, so the shuffle into the final global-top-k
-  window is k rows per (query, task) — never the codes themselves, and
-  never per-batch blocks. Local and global cuts share one tie-break
-  (score desc, neighbor_id asc), so results are partitioning-invariant.
+  the vectorized float64 argmin against the broadcast codebooks (numpy
+  over the batch — the sanctioned Python escape hatch, never per-row).
+- **search**: one float64 LUT builder (:func:`_luts`), one per-task
+  running top-k (:func:`_adc_topk`) and one global window
+  (:func:`_ranked`) — the REPOSE shape: a local top-k kernel per
+  partition, then one global cut. Queries' LUTs travel in the task
+  closure; each task accumulates a running top-k per query ACROSS its
+  Arrow batches and emits once at iterator exhaustion, so the shuffle
+  into the window is k rows per (query, task) — never the codes
+  themselves, and never per-batch blocks. Local and global cuts share
+  one tie-break (score desc, neighbor_id asc), so results are
+  partitioning-invariant.
 
-Exactness note: ADC scores are approximations of the true dot product;
-:func:`pq_topk`'s quality contract is recall against exact search (tested),
-not bit-equality — hence unit-proven, not DuckDB-oracled.
+Exactness note: ADC scores approximate the true dot product, so the
+quality contract against exact search is recall (tested). Between
+themselves the three scoring paths — driver LUTs, the join formulation
+and IVF-PQ at full probe — agree bit for bit: they build the same
+float64 LUT entries and add the m parts in the same order. All three are
+graded against a DuckDB replay of a frozen codebook
+(``pq_adc_topk_embeddings``, part of ``embedding_search_suite``).
 """
 
 from __future__ import annotations
@@ -90,21 +98,21 @@ def _topk_cut(scores: "np.ndarray", ids: "np.ndarray", k: int) -> "np.ndarray":
 
 
 # per-task temp bound for the vectorized multi-query ADC gather: chunk the
-# query axis so the (q_chunk, n, m) float64 gather stays under this
+# query axis so the (q_chunk, n) float64 score block stays under this
 _ADC_CHUNK_BYTES = 64 << 20
 
 
-def _adc_score_chunk(lut_chunk: "np.ndarray",
-                     code_mat: "np.ndarray") -> "np.ndarray":
-    """(q_chunk, n) ADC scores for a chunk of query LUTs against one
-    batch's code matrix — the vectorized form of the former per-query
-    ``lut[arange(m), code_mat].sum(axis=1)`` loop. The reduction runs
-    over the SAME contiguous length-m axis with the same numpy pairwise
-    algorithm, so each (query, row) score is bit-identical to the
-    per-query path's float64."""
-    m = code_mat.shape[1]
-    j_idx = np.arange(m)
-    return lut_chunk[:, j_idx[None, :], code_mat].sum(axis=2)
+def _adc_scores(luts: "np.ndarray", code_mat: "np.ndarray") -> "np.ndarray":
+    """(q, n) ADC scores of q query LUTs against one batch's (n, m) code
+    matrix. The m looked-up parts are added one subspace at a time,
+    j = 0..m-1 — the order in which the join formulation's sum folds its
+    posexploded rows. Written out because numpy's ``sum(axis=...)`` picks
+    a sequential fold or pairwise blocks (m >= 8) from the memory layout
+    of its input, and the two differ in the last bit."""
+    scores = luts[:, 0, code_mat[:, 0]]
+    for j in range(1, luts.shape[1]):
+        scores += luts[:, j, code_mat[:, j]]
+    return scores
 
 
 @dataclass
@@ -170,6 +178,26 @@ _CODE_SCHEMA = T.StructType(
 )
 
 
+def _luts(x: "np.ndarray", book: PqCodebook) -> "np.ndarray":
+    """The one ADC lookup-table builder: ``(n, m, k_sub)`` float64
+    sub-dot-products of each row of ``x`` (n, dim) with every subspace's
+    centroids. ``einsum`` (unoptimized, so no BLAS) and not ``@``: a
+    gemm's per-row results depend on how many rows share the call, and
+    the join formulation builds its LUTs per Arrow batch of queries while
+    the driver builds them all at once — einsum's per-entry reduction over
+    ``dsub`` does not."""
+    x = np.asarray(x, dtype=np.float64).reshape(-1, book.dim)
+    dsub = book.dsub
+    return np.stack(
+        [
+            np.einsum("nd,kd->nk", x[:, j * dsub : (j + 1) * dsub],
+                      np.asarray(c, dtype=np.float64))
+            for j, c in enumerate(book.centroids)
+        ],
+        axis=1,
+    )
+
+
 def pq_encode(
     corpus: DataFrame,
     book: PqCodebook,
@@ -178,17 +206,18 @@ def pq_encode(
 ) -> DataFrame:
     """One distributed encode pass: ``(id, code ARRAY<INT> length m)``.
     Vectorized per Arrow batch; the codebooks ride the task closure
-    (m * k_sub * dsub floats — a few MB at most)."""
-    cents = [c.astype(np.float32) for c in book.centroids]
+    (m * k_sub * dsub floats — a few MB at most). The argmin runs in
+    float64, the precision the oracle's ``ORDER BY d2, c`` compares in."""
     dsub = book.dsub
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.asarray(list(pdf["v"]), dtype=np.float32)
-            codes = np.empty((len(x), len(cents)), dtype=np.int32)
-            for j, c in enumerate(cents):
+            x = np.asarray(list(pdf["v"]), dtype=np.float64)
+            codes = np.empty((len(x), book.m), dtype=np.int32)
+            for j, c in enumerate(book.centroids):
+                c = np.asarray(c, dtype=np.float64)
                 sub = x[:, j * dsub : (j + 1) * dsub]
                 # ||s - c||^2 argmin via the expanded form (no NxKxD temp)
                 d2 = (
@@ -206,6 +235,79 @@ def pq_encode(
     return narrowed.mapInPandas(run, schema=_CODE_SCHEMA)
 
 
+def _queries(queries: DataFrame, query_id: str, query_vec: str) -> DataFrame:
+    """``(qid, v)`` of every query with a vector: a NULL vector has no
+    LUT, so it gets no neighbors."""
+    return queries.select(
+        F.col(query_id).cast("long").alias("qid"),
+        F.col(query_vec).cast("array<float>").alias("v"),
+    ).filter(F.col(query_vec).isNotNull())
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """The one global cut: ``(query_id, neighbor_id, score)`` ranked by
+    (score desc, neighbor_id asc) per query, top ``k`` kept, ``rank``
+    appended."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _adc_topk(
+    cand: DataFrame,
+    qids: "np.ndarray",
+    luts: "np.ndarray",
+    k: int,
+    exclude_self: bool,
+    probe: "np.ndarray | None" = None,
+) -> DataFrame:
+    """The one running ADC top-k, ranked by :func:`_ranked`. ``cand``
+    carries ``(id, code)`` rows — plus ``cluster`` when ``probe`` is
+    given, a (query, cluster) bool mask that restricts each query to the
+    rows of its probed clusters. Each task keeps a running top-k per query
+    across ALL its batches and emits once: emitting per batch would
+    inflate the shuffle by the batch count. Scores are gathered for a
+    chunk of queries at once: m vectorized gathers per chunk, not per
+    query."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: dict[int, tuple] = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf["id"].to_numpy()
+            code_mat = np.asarray(list(pdf["code"]), dtype=np.int64)
+            if probe is not None:
+                clusters = pdf["cluster"].to_numpy()
+            chunk = max(1, _ADC_CHUNK_BYTES // (8 * len(ids)))
+            for q0 in range(0, len(qids), chunk):
+                sc = _adc_scores(luts[q0:q0 + chunk], code_mat)
+                for qi in range(sc.shape[0]):
+                    qid = int(qids[q0 + qi])
+                    if probe is not None:
+                        keep = probe[q0 + qi, clusters]
+                    else:
+                        keep = np.ones(len(ids), dtype=bool)
+                    if exclude_self:
+                        keep &= ids != qid
+                    if not keep.any() and qid not in acc:
+                        continue
+                    s, i = sc[qi][keep], ids[keep]
+                    if qid in acc:
+                        s = np.concatenate([acc[qid][0], s])
+                        i = np.concatenate([acc[qid][1], i])
+                    top = _topk_cut(s, i, k)
+                    acc[qid] = (s[top], i[top])
+        for qid, (s, i) in acc.items():
+            yield pd.DataFrame({"query_id": qid, "neighbor_id": i, "score": s})
+
+    return _ranked(cand.mapInPandas(
+        run, schema="query_id long, neighbor_id long, score double"), k)
+
+
 def _pq_topk_join(
     q_n: DataFrame,
     codes: DataFrame,
@@ -221,41 +323,26 @@ def _pq_topk_join(
     same ADC scores. Cost is the brute-force |corpus|*m*|queries| score
     matrix — the honest price of exact ADC over every query; IVF-PQ
     (:func:`ivf_pq_topk`) is the pruned scale path."""
-    cents = [c.astype(np.float32) for c in book.centroids]
-    dsub, m = book.dsub, len(book.centroids)
-    ksub = cents[0].shape[0]
-
-    lut_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("j", T.IntegerType()),
-            T.StructField("c", T.IntegerType()),
-            T.StructField("part", T.DoubleType()),
-        ]
-    )
+    m, ksub = book.m, book.centroids[0].shape[0]
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             qids = pdf["qid"].to_numpy()
-            x = np.asarray(list(pdf["v"]), dtype=np.float32)
-            # (n, m, ksub) exact sub-dot-products, one matmul per subspace
-            parts = np.stack(
-                [x[:, j * dsub : (j + 1) * dsub] @ cents[j].T for j in range(m)],
-                axis=1,
-            )
+            parts = _luts(list(pdf["v"]), book)
             n = len(qids)
             yield pd.DataFrame(
                 {
                     "qid": np.repeat(qids, m * ksub),
                     "j": np.tile(np.repeat(np.arange(m, dtype=np.int32), ksub), n),
                     "c": np.tile(np.arange(ksub, dtype=np.int32), n * m),
-                    "part": parts.reshape(-1).astype(np.float64),
+                    "part": parts.reshape(-1),
                 }
             )
 
-    lut_df = q_n.mapInPandas(build, schema=lut_schema)
+    lut_df = q_n.mapInPandas(
+        build, schema="qid long, j int, c int, part double")
     codes_x = codes.select(
         "id", F.posexplode("code").alias("j", "c")
     ).withColumn("j", F.col("j").cast("int")).withColumn(
@@ -263,23 +350,20 @@ def _pq_topk_join(
     )
     scored = (
         codes_x.join(lut_df, ["j", "c"])
-        # partial (map-side) aggregation folds the m per-subspace rows
-        # before the (qid, id) shuffle
+        # partial (map-side) aggregation folds the m per-subspace rows, in
+        # posexplode order j = 0..m-1, before the (qid, id) shuffle
         .groupBy("qid", "id")
         .agg(F.sum("part").alias("score"))
     )
     if exclude_self:
         scored = scored.filter(F.col("id") != F.col("qid"))
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
+    return _ranked(
+        scored.select(
             F.col("qid").alias("query_id"),
             F.col("id").alias("neighbor_id"),
             "score",
-            "rank",
-        )
+        ),
+        k,
     )
 
 
@@ -297,7 +381,7 @@ def pq_topk(
     LUT rows for every code and emits the local top-k; a window takes the
     global top-k. Returns ``(query_id, neighbor_id, score, rank)`` where
     score approximates the dot product (== cosine for L2-normalized
-    vectors).
+    vectors). Queries with a NULL vector are dropped.
 
     ``exclude_self``: when True (default), candidates whose id equals the
     query id are dropped — the right semantics for self-join dedup over
@@ -306,100 +390,28 @@ def pq_topk(
     the integer id is silently excluded.
 
     Query-set bound: up to ``max_driver_queries`` queries, per-query LUTs
-    travel in the task closure (each LUT is m*k_sub floats — the driver
-    collect is bounded at ~max_driver_queries * m * k_sub * 4 bytes, e.g.
-    4096*8*256*4 = 32 MB). Beyond that the function switches to a fully
-    distributed join formulation: LUT entries become a (qid, j, c, part)
-    DataFrame, codes posexplode to (id, j, c), and one equi-join on
-    (j, c) + a partial-aggregated sum reconstructs the ADC score with no
-    driver state at all — any query count. Both paths accumulate the
-    float32 LUT entries in float64, so scores agree to the last bit up to
-    BLAS summation order of the sub-dot-products themselves.
+    travel in the task closure (each LUT is m*k_sub float64 entries — the
+    driver collect is bounded at ~max_driver_queries * m * k_sub * 8
+    bytes, e.g. 4096*8*256*8 = 64 MB). Beyond that the function switches
+    to a fully distributed join formulation: LUT entries become a
+    (qid, j, c, part) DataFrame, codes posexplode to (id, j, c), and one
+    equi-join on (j, c) + a partial-aggregated sum reconstructs the ADC
+    score with no driver state at all — any query count. Both paths build
+    the same float64 LUT entries (:func:`_luts`) and add the m parts in
+    subspace order, so their scores agree exactly while the join's LUT
+    side broadcasts (a shuffled join splits a score's parts across
+    partitions and merges them in arrival order).
     """
-    q_n = queries.select(
-        F.col(query_id).cast("long").alias("qid"),
-        F.col(query_vec).cast("array<float>").alias("v"),
-    ).filter(F.col(query_vec).isNotNull())
+    q_n = _queries(queries, query_id, query_vec)
     # take(N+1) bounds the strategy probe itself — never a full count of
     # an arbitrarily large query set — and when the driver path wins, the
     # probe's rows ARE the full query set: no second collect/scan
     q_rows = q_n.take(max_driver_queries + 1)
     if len(q_rows) > max_driver_queries:
         return _pq_topk_join(q_n, codes, book, k, exclude_self)
-    cents = [c.astype(np.float32) for c in book.centroids]
-    dsub = book.dsub
-    luts = []  # (qid, (m, k_sub) float32 LUT of exact sub-dot-products)
-    for r in q_rows:
-        qv = np.asarray(r["v"], dtype=np.float32)
-        # float64 accumulation, matching _pq_topk_join's float64 part sums:
-        # otherwise top-k membership can flip at near-tie boundaries when a
-        # query set crosses the max_driver_queries threshold
-        lut = np.stack(
-            [cents[j] @ qv[j * dsub : (j + 1) * dsub] for j in range(len(cents))]
-        ).astype(np.float64)
-        luts.append((int(r["qid"]), lut))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    qids_arr = np.array([q for q, _ in luts], dtype=np.int64)
-    lut_all = np.stack([l for _, l in luts]) if luts else None
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # running top-k per query across ALL of this task's batches:
-        # emitting per batch would inflate the shuffle by the batch count.
-        # Scores are gathered for a CHUNK of queries at once (r15): the
-        # former per-query fancy-index loop paid Q python iterations and
-        # Q separate (n, m) gathers per batch — the wall of the driver-LUT
-        # path once Q reaches the hundreds. Per-(query, row) float64
-        # scores are bit-identical (_adc_score_chunk).
-        acc: dict[int, tuple] = {}
-        if lut_all is None:
-            return
-        nq, m = lut_all.shape[0], lut_all.shape[1]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["id"].to_numpy()
-            code_mat = np.ascontiguousarray(
-                np.asarray(list(pdf["code"]), dtype=np.int64))
-            n = len(ids)
-            chunk = max(1, _ADC_CHUNK_BYTES // max(1, n * m * 8))
-            for q0 in range(0, nq, chunk):
-                sc = _adc_score_chunk(lut_all[q0:q0 + chunk], code_mat)
-                for qi in range(sc.shape[0]):
-                    qid = int(qids_arr[q0 + qi])
-                    if exclude_self:
-                        keep = ids != qid
-                        s, i = sc[qi][keep], ids[keep]
-                    else:
-                        s, i = sc[qi], ids
-                    if qid in acc:
-                        s = np.concatenate([acc[qid][0], s])
-                        i = np.concatenate([acc[qid][1], i])
-                    top = _topk_cut(s, i, k)
-                    acc[qid] = (s[top], i[top])
-        for qid, (s, i) in acc.items():
-            yield pd.DataFrame(
-                {
-                    "query_id": qid,
-                    "neighbor_id": i,
-                    "score": s.astype(np.float64),
-                }
-            )
-
-    local = codes.mapInPandas(run, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return local.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    qids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
+    luts = _luts([r["v"] for r in q_rows], book)
+    return _adc_topk(codes, qids, luts, k, exclude_self)
 
 
 def ivf_pq_topk(
@@ -420,132 +432,48 @@ def ivf_pq_topk(
     smaller than the floats. ``ivf_index`` is a
     :class:`graflo_spark.ops.simsearch.IvfIndex` built over the SAME
     corpus the codes encode. At ``n_probe == n_centroids`` results equal
-    :func:`pq_topk` exactly (pruning disabled, same ADC scores)."""
+    :func:`pq_topk` exactly (pruning disabled, same ADC scores). Queries
+    with a NULL vector are dropped, as in :func:`pq_topk`."""
     from graflo_spark.ops.simsearch import cosine_expr
 
-    q = queries.select(
-        F.col(query_id).cast("long").alias("query_id"),
-        F.col(query_vec).cast("array<float>").alias("v"),
-    )
-    qc = q.crossJoin(F.broadcast(ivf_index.centroids)).select(
-        "query_id", "v", "cluster",
+    q_n = _queries(queries, query_id, query_vec)
+    qc = q_n.crossJoin(F.broadcast(ivf_index.centroids)).select(
+        "qid", "cluster",
         cosine_expr(
             F.col("v").cast("array<double>"), F.col("centroid")
         ).alias("c_cos"),
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("c_cos").desc(), "cluster"
-    )
+    wq = Window.partitionBy("qid").orderBy(F.col("c_cos").desc(), "cluster")
     probes = (
         qc.withColumn("__r", F.row_number().over(wq))
         .filter(F.col("__r") <= n_probe)
-        .select("query_id", "cluster")
+        .select("qid", "cluster")
     )
-    # Probe sets travel in the TASK CLOSURE, not a join (r15): the former
-    # shape broadcast-joined probes onto the assignment and then id-joined
-    # the codes in, REPLICATING every probed code row once per probing
-    # query — at the full-probe grading point that materialized a
-    # |queries| x |codes| frame through the join (4M rows at the 10x SF,
-    # 13 of the row's 16 s; guide §3.3 "explode before a join multiplies
-    # the shuffle"). The queries (and so the probes) are ALREADY bounded
-    # driver state — this function collects them for the LUTs — so the
-    # candidate frame is now ONE equi-join attaching each code row's
-    # cluster, pruned to the union of probed clusters (at scale: real
-    # partition pruning on a cluster-partitioned index), and each task
-    # scores its rows against every query probing that row's cluster,
-    # vectorized over the query axis.
-    cents = [c.astype(np.float32) for c in book.centroids]
-    dsub = book.dsub
-    luts = {}
-    for r in q.collect():
-        qv = np.asarray(r["v"], dtype=np.float32)
-        # float64 accumulation from here on, matching pq_topk/_pq_topk_join:
-        # a float32 LUT sum flips top-k membership at near-tie boundaries,
-        # breaking the documented equality with pq_topk at full probe
-        luts[int(r["query_id"])] = np.stack(
-            [cents[j] @ qv[j * dsub : (j + 1) * dsub] for j in range(len(cents))]
-        ).astype(np.float64)
-    probe_of: dict[int, set] = {}
-    for r in probes.collect():
-        probe_of.setdefault(int(r["query_id"]), set()).add(int(r["cluster"]))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
+    # Probe sets travel in the TASK CLOSURE as a (query, cluster) mask, not
+    # a join: joining probes onto the codes would replicate every probed
+    # code row once per probing query (a |queries| x |codes| frame at full
+    # probe). The queries are already bounded driver state — collected
+    # for the LUTs — so the candidate frame is ONE equi-join attaching each
+    # code row's cluster, pruned to the union of probed clusters, and each
+    # task scores its rows against every query probing that row's cluster.
+    q_rows = q_n.collect()
+    qids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
+    luts = _luts([r["v"] for r in q_rows], book)
+    row_of = {int(q): i for i, q in enumerate(qids)}
+    probe_rows = probes.collect()
+    probed_clusters = sorted({int(r["cluster"]) for r in probe_rows})
+    probe = np.zeros((len(qids), max(probed_clusters, default=0) + 1),
+                     dtype=bool)
+    for r in probe_rows:
+        probe[row_of[int(r["qid"])], int(r["cluster"])] = True
+    cand = (
+        ivf_index.assigned.select(F.col("neighbor_id").alias("id"), "cluster")
+        .filter(F.col("cluster").isin(probed_clusters))
+        .join(codes, "id")
+        .select("id", "cluster", "code")
     )
-
-    probed_clusters = sorted({c for cs in probe_of.values() for c in cs})
-    spark = queries.sparkSession
-    if not probed_clusters or not luts:
-        local = spark.createDataFrame([], out_schema)
-    else:
-        cand = (
-            ivf_index.assigned.select(
-                F.col("neighbor_id").alias("id"), "cluster"
-            )
-            .filter(F.col("cluster").isin(probed_clusters))
-            .join(codes, "id")
-            .select("id", "cluster", "code")
-        )
-        # AQE coalesces the small join output to ONE partition, which
-        # would serialize the Q x n x m scoring below on one core;
-        # probe=False because probing a join output executes it (no-op
-        # at scale / off local masters)
-        cand = ensure_min_parallelism(cand, probe=False)
-        qids_arr = np.array(sorted(luts), dtype=np.int64)
-        lut_all = np.stack([luts[int(qid)] for qid in qids_arr])
-        max_cl = max(probed_clusters)
-        probe_mat = np.zeros((len(qids_arr), max_cl + 1), dtype=bool)
-        for qi, qid in enumerate(qids_arr):
-            for c in probe_of.get(int(qid), ()):
-                probe_mat[qi, c] = True
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc: dict[int, tuple] = {}
-            nq, m = lut_all.shape[0], lut_all.shape[1]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf["id"].to_numpy()
-                clusters = pdf["cluster"].to_numpy()
-                # clusters above the probed range can't reach here (the
-                # scan filter), but guard the mask lookup anyway
-                clusters = np.clip(clusters, 0, max_cl)
-                code_mat = np.ascontiguousarray(
-                    np.asarray(list(pdf["code"]), dtype=np.int64))
-                n = len(ids)
-                chunk = max(1, _ADC_CHUNK_BYTES // max(1, n * m * 8))
-                for q0 in range(0, nq, chunk):
-                    sc = _adc_score_chunk(lut_all[q0:q0 + chunk], code_mat)
-                    for qi in range(sc.shape[0]):
-                        qid = int(qids_arr[q0 + qi])
-                        keep = probe_mat[q0 + qi, clusters]
-                        if exclude_self:
-                            keep = keep & (ids != qid)
-                        if not keep.any() and qid not in acc:
-                            continue
-                        s, i = sc[qi][keep], ids[keep]
-                        if qid in acc:
-                            s = np.concatenate([acc[qid][0], s])
-                            i = np.concatenate([acc[qid][1], i])
-                        top = _topk_cut(s, i, k)
-                        acc[qid] = (s[top], i[top])
-            for qid, (s, i) in acc.items():
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": i,
-                        "score": s.astype(np.float64),
-                    }
-                )
-
-        local = cand.mapInPandas(run, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return local.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    # AQE coalesces the small join output to ONE partition, which would
+    # serialize the Q x n x m scoring on one core; probe=False because
+    # probing a join output executes it (no-op at scale / off local masters)
+    cand = ensure_min_parallelism(cand, probe=False)
+    return _adc_topk(cand, qids, luts, k, exclude_self, probe)

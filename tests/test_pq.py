@@ -5,8 +5,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from graflo_spark.ops.pq import pq_encode, pq_topk, train_pq
-from graflo_spark.ops.simsearch import brute_force_topk
+from graflo_spark.ops.pq import ivf_pq_topk, pq_encode, pq_topk, train_pq
+from graflo_spark.ops.simsearch import brute_force_topk, build_ivf_index
 
 
 @pytest.fixture(scope="module")
@@ -72,12 +72,54 @@ def test_pq_topk_recall_vs_exact(spark, emb):
         assert 1 <= r["rank"] <= 10
 
 
+def _ranking(df):
+    """{(query_id, rank): (neighbor_id, unrounded score)}"""
+    return {(r["query_id"], r["rank"]): (r["neighbor_id"], r["score"])
+            for r in df.collect()}
+
+
+@pytest.fixture(scope="module")
+def m4(emb):
+    """One m=4 codebook (dsub=16, the oracle codebook's shape), its codes
+    and a 4-cell IVF index, shared by the path-agreement tests."""
+    book = train_pq(emb, m=4, k_sub=8, iters=5)
+    return book, pq_encode(emb, book), build_ivf_index(
+        emb, n_centroids=4, max_iter=3)
+
+
+def test_pq_paths_agree_bit_for_bit(spark, emb, m4):
+    """Driver LUTs, the join formulation and IVF-PQ at full probe build
+    the same float64 LUT entries and add the m parts in the same order,
+    so their UNROUNDED scores are equal: an oracle graded at
+    ROUND(score, 4) can never see them land on two sides of a half
+    boundary."""
+    book, codes, index = m4
+    queries = emb.filter(F.col("vec_id") % 7 == 0)
+    lut = _ranking(pq_topk(queries, codes, book))
+    assert len(lut) == 72 * 10
+    assert _ranking(pq_topk(queries, codes, book,
+                            max_driver_queries=0)) == lut
+    assert _ranking(ivf_pq_topk(queries, index, codes, book,
+                                n_probe=4)) == lut
+
+
+def test_null_query_vector_is_dropped(spark, emb, m4):
+    """A query with a NULL vector has no LUT: every path drops it and
+    ranks the others as if it were absent."""
+    book, codes, index = m4
+    queries = emb.filter(F.col("vec_id") < 3).withColumn(
+        "embedding",
+        F.when(F.col("vec_id") != 1, F.col("embedding")),
+    )
+    plain = _ranking(pq_topk(queries, codes, book))
+    assert {q for q, _ in plain} == {0, 2} and len(plain) == 2 * 10
+    assert _ranking(ivf_pq_topk(queries, index, codes, book,
+                                n_probe=4)) == plain
+
+
 def test_ivf_pq_full_probe_equals_pq(spark, emb):
     """At n_probe == n_centroids the IVF pruning is disabled, so IVF-PQ
     must reproduce pq_topk exactly (same ADC scores, same ranking)."""
-    from graflo_spark.ops.pq import ivf_pq_topk
-    from graflo_spark.ops.simsearch import build_ivf_index
-
     book = train_pq(emb, m=16, k_sub=32, iters=5)
     codes = pq_encode(emb, book)
     index = build_ivf_index(emb, n_centroids=4, max_iter=3)
@@ -85,12 +127,7 @@ def test_ivf_pq_full_probe_equals_pq(spark, emb):
 
     full = ivf_pq_topk(queries, index, codes, book, k=10, n_probe=4)
     plain = pq_topk(queries, codes, book, k=10)
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    got = {key(r): (r["neighbor_id"], round(r["score"], 6))
-           for r in full.collect()}
-    want = {key(r): (r["neighbor_id"], round(r["score"], 6))
-            for r in plain.collect()}
-    assert got == want
+    assert _ranking(full) == _ranking(plain)
     # pruned probe returns k rows per query from the probed clusters only
     pruned = ivf_pq_topk(queries, index, codes, book, k=10, n_probe=1)
     counts = {r["query_id"]: 0 for r in pruned.collect()}
@@ -114,14 +151,8 @@ def test_pq_join_fallback_matches_driver_path(spark, emb):
     book = train_pq(emb, m=8, k_sub=16, iters=5)
     codes = pq_encode(emb, book)
     queries = emb.filter(F.col("vec_id") < 8)
-    via_driver = pq_topk(queries, codes, book, k=5)
-    via_join = pq_topk(queries, codes, book, k=5, max_driver_queries=0)
-    # scores agree to float32 summation-order tolerance (the two paths sum
-    # the m partial dot products in different orders)
-    d = {(r["query_id"], r["rank"]): (r["neighbor_id"], round(r["score"], 4))
-         for r in via_driver.collect()}
-    j = {(r["query_id"], r["rank"]): (r["neighbor_id"], round(r["score"], 4))
-         for r in via_join.collect()}
+    d = _ranking(pq_topk(queries, codes, book, k=5))
+    j = _ranking(pq_topk(queries, codes, book, k=5, max_driver_queries=0))
     assert d == j and len(d) == 8 * 5
 
 
