@@ -28,9 +28,12 @@ Edge-casting semantics re-derived from the reference renderer
 Scale notes: same-row edges never shuffle; cross-branch edges shuffle on
 ``__doc_id`` which is uniformly distributed (no skew); vertex dedup is a
 hash aggregate on identity columns that AQE coalesces. The base frame is
-persisted only when ``monotonically_increasing_id`` must stay stable across
-DAG branches — pass ``ResourceConfig.doc_key`` to get a deterministic,
-persist-free document id at 100 TB.
+materialized only when ``monotonically_increasing_id`` must stay stable
+across DAG branches: a local checkpoint owned by the returned GraphBatch,
+so every branch reads the same ids and no later compile can splice into
+or retire them (the rule: ``ops.util.Checkpointer``). Pass
+``ResourceConfig.doc_key`` to get a deterministic, checkpoint-free
+document id at 100 TB.
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ from pyspark.sql import types as T
 from graflo_spark import identity as ident
 from graflo_spark.container import GraphBatch
 from graflo_spark.manifest import CoreSchema, Edge, EdgeId, IdentityMode, Vertex
-from graflo_spark.ops.util import scoped_persist
+from graflo_spark.ops.util import Checkpointer
 from graflo_spark.steps import (
     DescendStep,
     DynamicEdgeStep,
@@ -120,7 +123,7 @@ class ResourceCompiler:
         """True when the non-deterministic doc id feeds results: nested
         descents (cross-frame joins key on it) or minted identities (it seeds
         the digest). Flat natural-identity resources never observe it, so
-        their base needn't be persisted — one less materialization per
+        their base needn't be checkpointed — one less materialization per
         resource."""
 
         def walk(steps) -> bool:
@@ -139,20 +142,25 @@ class ResourceCompiler:
 
         return walk(self.resource.steps)
 
-    def compile(self, df: DataFrame, persist: bool = True) -> GraphBatch:
+    def compile(self, df: DataFrame,
+                checkpointer: Checkpointer | None = None) -> GraphBatch:
+        """``checkpointer``: the owner of the base checkpoint, for callers
+        that free it at a known point (streaming ingest frees it after
+        each micro-batch's write). By default the returned batch's frames
+        own it and Spark frees it with them."""
         self.extracts, self.edge_jobs = [], []
         self._dynamic_steps: list[DynamicEdgeStep] = []
         self._explicit_pairs = set()
 
         base = self._prepare_base(df)
-        if persist and self.resource.doc_key is None and self._doc_id_matters():
+        if self.resource.doc_key is None and self._doc_id_matters():
             # monotonically_increasing_id must not be recomputed differently
-            # across the DAG branches that re-read the base. Scoped: a
-            # recompile of the same resource must not splice into the
-            # previous compile's blocks (CacheManager keys on the
-            # canonicalized plan — stale data if the files changed, and
-            # cross-invocation reuse of work that should recompute).
-            base = scoped_persist(base, f"compiler.base.{self.resource.name}")
+            # across the DAG branches that re-read the base. A checkpoint,
+            # not a persist: a CacheManager entry is keyed by plan, so a
+            # later compile could splice into it or retire it, and a
+            # retired entry recomputes each branch's ids separately.
+            base = (base.localCheckpoint(eager=False) if checkpointer is None
+                    else checkpointer(base, "base"))
         root = Frame(path=(), df=base, pos_cols=(), pos_path=())
         self._walk(root, self.resource.steps)
         # dynamic links enumerate AFTER the whole walk: their role cross
@@ -811,9 +819,10 @@ class ResourceCompiler:
 
 
 def compile_resource(
-    schema: CoreSchema, resource: ResourceConfig, df: DataFrame, persist: bool = True
+    schema: CoreSchema, resource: ResourceConfig, df: DataFrame,
+    checkpointer: Checkpointer | None = None,
 ) -> GraphBatch:
-    return ResourceCompiler(schema, resource).compile(df, persist=persist)
+    return ResourceCompiler(schema, resource).compile(df, checkpointer)
 
 
 def add_vertex_weights(

@@ -22,10 +22,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graflo_spark.ops.util import (
+    Checkpointer,
     ensure_min_parallelism,
     md5_bits,
     py_md5_bits,
-    scoped_persist,
 )
 
 
@@ -228,23 +228,19 @@ def _lsh_candidates_with_sigs(
     bands: int = 16,
     unique_ids: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """(candidate pairs, the persisted ``(id, sig)`` table they were built
-    from). The sig table has exactly one row per input doc — callers that
-    need the input ID SET (e.g. the survivor base in :func:`minhash_dedup`)
-    read it off the already-persisted blocks instead of re-deriving it
-    with another scan + digest shuffle (r14)."""
+    """(candidate pairs, the checkpointed ``(id, sig)`` table they were
+    built from). The sig table has exactly one row per input doc — callers
+    that need the input ID SET (e.g. the survivor base in
+    :func:`minhash_dedup`) read it off the already-materialized blocks
+    instead of re-deriving it with another scan + digest shuffle (r14)."""
     # The sig table feeds three consumers (band explode + two hydration
     # joins); Catalyst does not reuse the aggregate subtree across them, so
-    # without persist the shingle explosion runs 3x. One row per doc makes
-    # this the natural materialization point at any scale. scoped: a bare
-    # persist() is never unpersisted, so every invocation leaked a
-    # CacheManager entry AND later invocations plan-matched into the stale
-    # blocks instead of recomputing from the input files (ops/util.py).
-    sig = scoped_persist(
-        minhash_signatures(
-            df, id_col, text_col, shingle_k, num_perm,
-            unique_ids=unique_ids),
-        "minhash_lsh_candidates.sig")
+    # without materializing it the shingle explosion runs 3x. One row per
+    # doc makes this the natural materialization point at any scale; a
+    # lazy local checkpoint owned by this call (ops/util.py Checkpointer).
+    sig = minhash_signatures(
+        df, id_col, text_col, shingle_k, num_perm,
+        unique_ids=unique_ids).localCheckpoint(eager=False)
     return _candidates_from_sigs(sig, num_perm, bands), sig
 
 
@@ -257,12 +253,12 @@ def _rep_candidates_with_sigs(
     bands: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
     """The exact-collapse dedup entry shape: candidate pairs + the
-    persisted ``(id, sig)`` table over the min-id representative of each
-    distinct non-null text (:func:`_rep_signatures` — sig-first, so no
-    shuffle carries the text payload)."""
-    sig = scoped_persist(
-        _rep_signatures(nonnull, id_col, text_col, shingle_k, num_perm),
-        "minhash_lsh_candidates.sig")
+    checkpointed ``(id, sig)`` table over the min-id representative of
+    each distinct non-null text (:func:`_rep_signatures` — sig-first, so
+    no shuffle carries the text payload)."""
+    sig = _rep_signatures(
+        nonnull, id_col, text_col, shingle_k, num_perm,
+    ).localCheckpoint(eager=False)
     return _candidates_from_sigs(sig, num_perm, bands), sig
 
 
@@ -592,7 +588,6 @@ class MinHashDedupStore:
         shingle_k: int = 5,
         num_perm: int = 64,
         bands: int = 16,
-        pin_results: bool = False,
     ):
         self.spark = spark
         self.path = path.rstrip("/")
@@ -609,14 +604,7 @@ class MinHashDedupStore:
         # survivor frame RETURNED by dedup_batch stays readable through
         # the next dedup_batch call — write or count it within the batch
         # (the foreachBatch contract) rather than holding it across many.
-        # ``pin_results=True`` opts back into session-lifetime pinning
-        # (keep=None: no generation is ever reclaimed) for callers that
-        # hold many batches' returned frames at once and accept the block
-        # growth.
-        from graflo_spark.ops.graphalgo import _RoundCheckpointer
-
-        self._ck = _RoundCheckpointer(
-            spark, keep=None if pin_results else 2)
+        self._ck = Checkpointer(spark)
 
     def _stored(self, name: str) -> DataFrame | None:
         import glob
@@ -685,9 +673,7 @@ class MinHashDedupStore:
         LIFETIME of the returned frame: its checkpoint blocks stay alive
         through the NEXT ``dedup_batch`` call and are reclaimed after that
         (two-generation window) — consume it within the batch (write or
-        count it, the foreachBatch contract). To hold results across many
-        batches, construct the store with ``pin_results=True`` (blocks
-        then live until session end, the pre-r7 behavior).
+        count it, the foreachBatch contract); to keep it longer, write it.
 
         NULL-text rows have no shingles and can never match anything: they
         pass through as survivors and are not stored."""
@@ -695,10 +681,10 @@ class MinHashDedupStore:
         # output-identical (see minhash_dedup) and immune to hot boilerplate
         # groups exploding the within-batch band join; sig-first (no
         # shuffle carries the text — _rep_signatures)
-        sig = _rep_signatures(
+        sig = self._ck(_rep_signatures(
             df.filter(F.col(self.text_col).isNotNull()),
             self.id_col, self.text_col, self.shingle_k, self.num_perm,
-        ).persist()
+        ), "sig")
 
         # (a) within-batch: greedy drop-larger-id over verified candidates
         cand = _candidates_from_sigs(sig, self.num_perm, self.bands)
@@ -781,9 +767,7 @@ class MinHashDedupStore:
         # checkpoint the RESULT too: it references this batch's `kept`
         # blocks, and tracking it (rather than returning it lazy) is what
         # lets the NEXT batch reclaim this batch's intermediates safely
-        out = self._ck(out, "out")
-        sig.unpersist()
-        return out
+        return self._ck(out, "out")
 
 
 def minhash_near_dup_clusters(
@@ -817,18 +801,17 @@ def minhash_near_dup_clusters(
     # (digest -> min-id representative) — NOT the text-carrying reps
     # aggregate. Catalyst shares no subtree across the three consumers,
     # so re-deriving reps for them would re-run the sha256 + full-text
-    # groupBy shuffle once per consumer (r14; a reps.persist() was
+    # groupBy shuffle once per consumer (r14; persisting reps was
     # measured WORSE — the InMemoryRelation hides size stats and flips
     # the downstream broadcasts to shuffled joins, 680 -> 1353 tasks).
     # rep_map shuffles 32-byte digests + ids only; by construction its
     # min-id per digest is exactly reps' id set. tds feeds BOTH rep_map
     # and the expansion join below — Catalyst shares no subtree, so
-    # without the scoped persist the document scan + sha256 pass ran
-    # twice per invocation (r14).
-    tds = scoped_persist(
-        nonnull.select(
-            F.col(id_col), F.sha2(F.col(text_col), 256).alias("__td")),
-        "minhash_near_dup_clusters.tds")
+    # without the checkpoint the document scan + sha256 pass ran twice
+    # per invocation (r14).
+    tds = nonnull.select(
+        F.col(id_col), F.sha2(F.col(text_col), 256).alias("__td"),
+    ).localCheckpoint(eager=False)
     rep_map = tds.groupBy("__td").agg(F.min(id_col).alias("__rep_id"))
     rep_clusters = ga.near_dup_clusters(
         rep_map.select(F.col("__rep_id").alias(id_col)),
@@ -1523,7 +1506,6 @@ class LineDedupStore:
         id_col: str = "doc_id",
         text_col: str = "text",
         delimiter: str = "\n",
-        pin_results: bool = False,
     ):
         import os
 
@@ -1533,10 +1515,7 @@ class LineDedupStore:
         self.text_col = text_col
         self.delimiter = delimiter
         os.makedirs(f"{self.path}/lines", exist_ok=True)
-        from graflo_spark.ops.graphalgo import _RoundCheckpointer
-
-        self._ck = _RoundCheckpointer(
-            spark, keep=None if pin_results else 2)
+        self._ck = Checkpointer(spark)
 
     def _seq_file(self) -> str:
         import os
@@ -1667,8 +1646,7 @@ class LineDedupStore:
         the caller never re-delivers a batch after scrub_batch returns.
 
         LIFETIME of the returned frame: two-generation checkpoint window
-        (consume within the batch; ``pin_results=True`` restores
-        session-lifetime blocks) — the dedup_batch/pack_batch contract.
+        (consume within the batch) — the dedup_batch/pack_batch contract.
         """
         seq, last_bid = self._state()
         if (batch_id is not None and last_bid is not None

@@ -16,122 +16,9 @@ accumulate.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, Window, functions as F
 
-# One lock for ALL trackers: block ids are attributed by diffing the
-# session-global getPersistentRDDs map, so two trackers (or two threads
-# driving the same tracker) interleaving their diff-checkpoint-diff
-# sequences would misattribute each other's blocks and free them early.
-# The critical section is tiny (one eager checkpoint + two map reads), so
-# a global mutex costs nothing next to the checkpoint's own job.
-_CKPT_LOCK = threading.Lock()
-
-
-class _RoundCheckpointer:
-    """Eager ``localCheckpoint`` with reclamation of superseded rounds.
-
-    Every per-round localCheckpoint pins its blocks in the block manager
-    until session end; dozens of iterative graph queries in one long-lived
-    session accumulate gigabytes of DEAD blocks (only the last round of
-    each loop is ever read again) and degrade into GC storms — the
-    operational footgun measured at 20x in SCALE.md. This tracker keeps,
-    per named slot, only the last TWO generations of checkpoint blocks
-    (the committing round plus the previous one, which a convergence
-    check may still read) and unpersists older generations the moment a
-    new round commits. ``finish(result)`` checkpoints the RESULT
-    (node-sized), then frees every tracked block — ONE bounded block per
-    algorithm call survives instead of max_iter edge-sized ones;
-    ``abort()`` frees everything on an error path.
-
-    Block ids are attributed by diffing
-    ``JavaSparkContext.getPersistentRDDs`` around the checkpoint call;
-    the module-level ``_CKPT_LOCK`` serializes that window across all
-    TRACKER call sites, so concurrent trackers never misattribute each
-    other's blocks. The lock cannot cover code that does not take it: a
-    non-tracker driver thread calling ``persist()``/``localCheckpoint()``
-    during the window is attributed to the in-flight generation and may
-    be unpersisted early. Documented contract: while any tracker is
-    active, other driver threads must not persist untracked frames (all
-    in-package call sites comply — the graph loops are single-threaded
-    per query).
-
-    Use as a context manager: ``with _RoundCheckpointer(spark) as ck:``
-    — an exception anywhere in the loop calls :meth:`abort`, freeing
-    every tracked block instead of leaking them for the session (the
-    accumulation failure mode this class exists to prevent).
-
-    ``keep`` (default 2) is the per-slot generation window: how many of
-    a slot's most recent checkpoints stay alive. 2 fits loops whose next
-    round reads only the previous one; pass ``keep=None`` for slots a
-    FINAL result still reads from every generation (e.g. a BFS whose
-    output unions all hops) — nothing is freed until ``finish``/
-    ``abort``.
-    """
-
-    def __init__(self, spark, enabled: bool = True, keep: int | None = 2):
-        self.enabled = enabled
-        self.keep = keep
-        self._jsc = spark.sparkContext._jsc if enabled else None
-        self._gens: dict[str, list[set[int]]] = {}
-
-    def __enter__(self) -> "_RoundCheckpointer":
-        return self
-
-    def __exit__(self, exc_type, exc, tb) -> bool:
-        if exc_type is not None:
-            self.abort()
-        return False
-
-    def _ids(self) -> set[int]:
-        return {
-            int(i) for i in self._jsc.getPersistentRDDs().keySet().toArray()
-        }
-
-    def _free(self, ids: set[int]) -> None:
-        jmap = self._jsc.getPersistentRDDs()
-        for i in ids:
-            rdd = jmap.get(i)
-            if rdd is not None:
-                rdd.unpersist(False)
-
-    def __call__(self, df: DataFrame, slot: str = "main") -> DataFrame:
-        if not self.enabled:
-            return df
-        with _CKPT_LOCK:
-            before = self._ids()
-            out = df.localCheckpoint(eager=True)
-            gens = self._gens.setdefault(slot, [])
-            gens.append(self._ids() - before)
-            if self.keep is not None:
-                while len(gens) > self.keep:
-                    self._free(gens.pop(0))
-        return out
-
-    def finish(self, result: DataFrame) -> DataFrame:
-        """Materialize ``result`` as its own checkpoint, then free every
-        intermediate round's blocks. The returned frame is self-contained
-        (LogicalRDD), so nothing it reads can have been freed."""
-        if not self.enabled:
-            return result
-        with _CKPT_LOCK:
-            before = self._ids()
-            out = result.localCheckpoint(eager=True)
-            keep = self._ids() - before
-            self._release_all(keep)
-        return out
-
-    def abort(self) -> None:
-        self._release_all(set())
-
-    def _release_all(self, keep: set[int]) -> None:
-        if not self.enabled:
-            return
-        for gens in self._gens.values():
-            for g in gens:
-                self._free(g - keep)
-        self._gens.clear()
+from graflo_spark.ops.util import Checkpointer
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -318,7 +205,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    checkpoint: bool = True,
     driver_collapse_max_edges: int = 100_000,
 ) -> DataFrame:
     """Connected components of the undirected graph given as id pairs.
@@ -332,9 +218,9 @@ def connected_components(
     Scale design: every round is groupBy + join on node ids (AQE-safe equi
     shuffles, map-side combinable), O(log n) rounds by the star-contraction
     bound, per-round ``localCheckpoint`` so the logical plan doesn't grow
-    with iterations — tracked by :class:`_RoundCheckpointer`, so superseded
-    rounds' blocks are reclaimed as the loop advances and only the
-    node-sized result block survives the call. No driver-side state beyond
+    with iterations — tracked by :class:`~graflo_spark.ops.util.Checkpointer`,
+    so superseded rounds' blocks are reclaimed as the loop advances and
+    only the node-sized result block survives the call. No driver-side state beyond
     the per-round convergence counter (a count() action on the round's
     delta).
 
@@ -346,7 +232,7 @@ def connected_components(
     the arithmetic at that size. Output identical either way; set it to
     0 to force the distributed path.
     """
-    with _RoundCheckpointer(pairs.sparkSession, checkpoint) as ck:
+    with Checkpointer(pairs.sparkSession) as ck:
         edges = ck(_symmetrize(
             pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))),
             "edges")
@@ -361,7 +247,6 @@ def connected_components(
         prev_cnt = edges.count()
         if prev_cnt <= driver_collapse_max_edges:
             out = _driver_components(edges)
-            ck.abort()
             return out
         converged = False
         # Both stars emit strictly ORIENTED rows (a > b: large star maps
@@ -522,7 +407,6 @@ def pagerank(
     damping: float = 0.85,
     max_iter: int = 20,
     tol: float | None = 1e-6,
-    checkpoint: bool = True,
     personalized: list | None = None,
     checkpoint_interval: int = 4,
     driver_collapse_max_edges: int = 100_000,
@@ -576,7 +460,7 @@ def pagerank(
     distributed path; ``tol`` mode always takes the distributed path (the
     early-stop delta is defined by the distributed accumulation).
     """
-    with _RoundCheckpointer(pairs.sparkSession, checkpoint) as ck:
+    with Checkpointer(pairs.sparkSession) as ck:
         edges = ck(
             pairs.select(F.col(id_src).alias("src"), F.col(id_dst).alias("dst"))
             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -603,7 +487,6 @@ def pagerank(
                     pairs.sparkSession.sparkContext.parallelize(
                         ranks_local, 1),
                     schema)
-                ck.abort()
                 return out
         nodes = ck(
             edges.select(F.col("src").alias("node"))
@@ -714,7 +597,6 @@ def label_propagation(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 5,
-    checkpoint: bool = True,
     checkpoint_interval: int = 4,
     driver_collapse_max_edges: int = 100_000,
 ) -> DataFrame:
@@ -749,7 +631,7 @@ def label_propagation(
     arithmetic, so the output is EXACTLY the distributed loop's, pinned
     by test_lpa_driver_path_matches_distributed. 0 forces the
     distributed path."""
-    with _RoundCheckpointer(pairs.sparkSession, checkpoint) as ck:
+    with Checkpointer(pairs.sparkSession) as ck:
         edges = ck(_symmetrize(
             pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))),
             "edges")
@@ -767,7 +649,6 @@ def label_propagation(
                     pairs.sparkSession.sparkContext.parallelize(
                         _driver_lpa(rows, max_iter), 1),
                     schema)
-                ck.abort()
                 return out
         labels = (
             edges.select(F.col("a").alias("node")).distinct()
@@ -898,7 +779,6 @@ def shortest_paths(
     id_dst: str = "id_b",
     weight_col: str | None = None,
     max_iter: int = 10,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Single/multi-source shortest path distances over a DIRECTED
     weighted edge list by synchronous relaxation (distributed
@@ -924,7 +804,7 @@ def shortest_paths(
     w = (F.col(weight_col).cast("double") if weight_col
          else F.lit(1.0))
     spark = edges.sparkSession
-    with _RoundCheckpointer(spark, checkpoint) as ck:
+    with Checkpointer(spark) as ck:
         e = edges.select(
             F.col(id_src).alias("src"), F.col(id_dst).alias("dst"),
             w.alias("w"),
@@ -998,7 +878,6 @@ def k_core(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 30,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """The k-core of the undirected graph: iteratively peel nodes of
     degree < ``k`` until the survivor set is stable (Seidman 1983,
@@ -1025,7 +904,7 @@ def k_core(
     at exhaustion the final ``degree >= k`` filter still holds, making
     the fixed-round result deterministic — the property the unrolled SQL
     oracle replays."""
-    with _RoundCheckpointer(pairs.sparkSession, checkpoint) as ck:
+    with Checkpointer(pairs.sparkSession) as ck:
         edges = ck(_symmetrize(
             pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))),
             "edges")
@@ -1060,7 +939,6 @@ def hits(
     id_src: str = "id_a",
     id_dst: str = "id_b",
     max_iter: int = 8,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999, public) over a DIRECTED
     edge list: mutual recursion ``auth(v) = sum of hub(u) over in-edges``,
@@ -1073,7 +951,7 @@ def hits(
     partitioned on node id; the L2 norms stay IN-PLAN as broadcast 1-row
     aggregates (same trick as pagerank's dangling mass — no driver
     actions inside the loop beyond the per-round checkpoint)."""
-    with _RoundCheckpointer(pairs.sparkSession, checkpoint) as ck:
+    with Checkpointer(pairs.sparkSession) as ck:
         edges = ck(
             pairs.select(F.col(id_src).alias("src"), F.col(id_dst).alias("dst"))
             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())

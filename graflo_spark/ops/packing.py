@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from graflo_spark.ops.util import Checkpointer
+
 
 def token_offsets(
     df: DataFrame,
@@ -195,8 +197,7 @@ class PackingStore:
 
     def __init__(self, spark, path: str, chunk_tokens: int,
                  id_col: str = "doc_id", token_col: str = "n_tok",
-                 order_col: str | None = None,
-                 pin_results: bool = False) -> None:
+                 order_col: str | None = None) -> None:
         import os
 
         self.spark = spark
@@ -212,12 +213,7 @@ class PackingStore:
         # pin one dead block set per micro-batch. The spans frame RETURNED
         # by pack_batch stays readable through the next pack_batch call;
         # it is also always re-readable from disk via spans().
-        # pin_results=True restores session-lifetime pinning (keep=None)
-        # for callers holding many batches' returned spans at once.
-        from graflo_spark.ops.graphalgo import _RoundCheckpointer
-
-        self._ck = _RoundCheckpointer(
-            spark, keep=None if pin_results else 2)
+        self._ck = Checkpointer(spark)
 
     def _total_file(self) -> str:
         import os
@@ -315,9 +311,7 @@ class PackingStore:
         LIFETIME of the returned frame: its checkpoint blocks stay alive
         through the NEXT ``pack_batch`` call and are reclaimed after that
         (two-generation window) — consume it within the batch, or re-read
-        from disk via :meth:`spans` which is always valid. To hold results
-        across many batches, construct the store with ``pin_results=True``
-        (session-lifetime blocks, the pre-r7 behavior)."""
+        from disk via :meth:`spans` which is always valid."""
         import os
         import tempfile
 

@@ -21,8 +21,8 @@ member operators already pay. The composed plan re-scans the (column-
 pruned) corpus once per dedup stage — PLANS.md grades it: 12/13 scans
 pushed-filter, dimension joins broadcast, zero Python in the plan. At
 100 TB either accept the scans (they are the cheap part next to the LSH
-shuffles) or `.persist(StorageLevel.DISK_ONLY)` the source frame before
-calling :func:`annotate`.
+shuffles) or write the column-pruned source to parquet once and call
+:func:`annotate` on that copy.
 """
 
 from __future__ import annotations
@@ -113,9 +113,6 @@ class PipelineConfig:
     )
     chunk_tokens: int = 2048
     lsh_kwargs: dict = field(default_factory=dict)
-    # persist the annotated frame across the multi-action fan-out in
-    # prepare_training_data (funnel + per-split packing + caller writes)
-    persist_annotated: bool = True
 
 
 # funnel order — each document is charged to the FIRST stage that drops it
@@ -390,7 +387,7 @@ def prepare_training_data(
     ``drop_stage``/``split`` tags, and ``funnel`` is the stage report.
 
     The annotated frame is materialized via an eager ``localCheckpoint``
-    (``cfg.persist_annotated``) before the fan-out: chunks branch per
+    before the fan-out: chunks branch per
     split and the funnel/annotated outputs each trigger their own action,
     and without it every one of them would re-run the whole annotate DAG
     — the LSH band join and representative selection ~5x per run at the
@@ -408,8 +405,7 @@ def prepare_training_data(
     truncate lineage), so unpersist only once done with it."""
     cfg = cfg or PipelineConfig()
     annotated = annotate(docs, bench, cfg)
-    if cfg.persist_annotated:
-        annotated = annotated.localCheckpoint()
+    annotated = annotated.localCheckpoint()
     kept = survivors(annotated)
     if cfg.dedup_lines_delimiter is not None:
         # line scrub before the token-span scrub: whole boilerplate lines
@@ -427,16 +423,15 @@ def prepare_training_data(
         "split",
         ts.token_count(F.col(cfg.text_col)).alias("__n_tok"),
     )
-    if cfg.persist_annotated:
-        # localCheckpoint, not persist: the per-split pack fan-out below
-        # re-plans this frame len(splits) times, and with the optional
-        # scrub + model-gate stages on, each re-plan carries the whole
-        # annotate DAG (lm/clf joins, line + substring scrubs) — the plan
-        # itself grows large enough to OOM the driver's codegen at big
-        # scale factors. Checkpointing the 3-column frame truncates the
-        # lineage (pennies of storage) and runs the scrubs ONCE instead
-        # of once per split.
-        with_tok = with_tok.localCheckpoint()
+    # localCheckpoint, not persist: the per-split pack fan-out below
+    # re-plans this frame len(splits) times, and with the optional
+    # scrub + model-gate stages on, each re-plan carries the whole
+    # annotate DAG (lm/clf joins, line + substring scrubs) — the plan
+    # itself grows large enough to OOM the driver's codegen at big
+    # scale factors. Checkpointing the 3-column frame truncates the
+    # lineage (pennies of storage) and runs the scrubs ONCE instead
+    # of once per split.
+    with_tok = with_tok.localCheckpoint()
     chunk_parts = []
     for name in cfg.splits:
         part = pk.pack_chunks(

@@ -48,7 +48,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from graflo_spark.ops.textstats import tokens_expr  # the ONE tokenizer
-from graflo_spark.ops.util import md5_bits, py_md5_bits, scoped_persist
+from graflo_spark.ops.util import md5_bits, py_md5_bits
 
 __all__ = [
     "tokens_expr", "term_bucket", "py_term_bucket", "build_postings",
@@ -378,9 +378,9 @@ def bm25_topk(
     # shares no subtree across them, so without this the vocab-pruned
     # postings build (the corpus tokenize+explode on the corpus path) ran
     # twice per call (r14). Vocab-pruned postings are bounded by the query
-    # vocabulary, the natural materialization point; scoped so
-    # re-invocations recompute from their inputs (ops/util.py).
-    post = scoped_persist(post, "bm25_topk.postings")
+    # vocabulary, the natural materialization point; a lazy local
+    # checkpoint owned by this call (the rule: ops/util.py Checkpointer).
+    post = post.localCheckpoint(eager=False)
 
     df_tbl = post.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df"))

@@ -193,8 +193,8 @@ def mix_corpora(
     function of (id, salt) per source, so the blend is reproducible on any
     cluster layout. Costs one count() aggregate per source (metadata-cheap
     for parquet-backed frames; a COMPUTED source re-runs its whole lineage
-    here — persist such inputs first, the same caveat as
-    ``pipeline.prepare_training_data``'s ``persist_annotated``) before the
+    here — checkpoint such inputs first, as
+    ``pipeline.prepare_training_data`` does its annotated frame) before the
     single filtered union; adds ``source_col``.
 
     Schemas must be union-compatible; proportions are accurate to the

@@ -479,7 +479,7 @@ class GraphView:
         # make that real partition pruning — and (b) joins on native key
         # columns instead of building a string node_key for every edge row
         # in the graph.
-        from graflo_spark.ops.graphalgo import _RoundCheckpointer
+        from graflo_spark.ops.util import Checkpointer
 
         adjacency = self._adjacency(relations, direction)
         # projections are built on first use: an edge type no frontier
@@ -514,7 +514,7 @@ class GraphView:
         # all: one bounded block survives the traversal instead of seeds +
         # one per (hop, type).
         spark = next(iter(initial.values())).sparkSession
-        with _RoundCheckpointer(spark, keep=None) as ck:
+        with Checkpointer(spark, keep=None) as ck:
 
             def counted(df: DataFrame, slot: str,
                         label: str | None = None) -> tuple[DataFrame, int]:

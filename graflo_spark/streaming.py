@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 
 from graflo_spark.compiler import compile_resource
 from graflo_spark.manifest import CoreSchema
+from graflo_spark.ops.util import Checkpointer
 from graflo_spark.steps import ResourceConfig
 from graflo_spark.store import GraphStore
 
@@ -121,13 +122,16 @@ def stream_ingest(
 ):
     """foreachBatch ingest: every micro-batch runs the batch compiler and
     upserts — re-ingest is idempotent by merge-on-identity, so at-least-once
-    delivery yields exactly-once table state."""
+    delivery yields exactly-once table state. Each micro-batch's
+    compile checkpoint is freed once its write lands, so a long-running
+    stream holds no block of a finished batch."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        gb = compile_resource(schema, resource, batch_df, persist=True)
-        store.write_batch(gb)
+        with Checkpointer(batch_df.sparkSession) as ck:
+            store.write_batch(
+                compile_resource(schema, resource, batch_df, ck))
 
     writer = stream.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir

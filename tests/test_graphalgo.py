@@ -693,12 +693,12 @@ def test_round_checkpointer_bounds_blocks(spark):
     not pin one checkpoint block set per round for the session. Mid-run
     each slot holds at most `keep` generations; after finish() only the
     result's own block survives the call."""
-    from graflo_spark.ops.graphalgo import _RoundCheckpointer
+    from graflo_spark.ops.util import Checkpointer
 
     spark.catalog.clearCache()
     base = _persistent_rdd_count(spark)
     df = spark.range(100).withColumnRenamed("id", "x")
-    ck = _RoundCheckpointer(spark)
+    ck = Checkpointer(spark)
     cur = df
     for i in range(6):
         cur = ck(cur.withColumn("x", F.col("x") + 1), "loop")
@@ -710,13 +710,13 @@ def test_round_checkpointer_bounds_blocks(spark):
 
 
 def test_round_checkpointer_abort_frees_everything(spark):
-    from graflo_spark.ops.graphalgo import _RoundCheckpointer
+    from graflo_spark.ops.util import Checkpointer
 
     spark.catalog.clearCache()
     base = _persistent_rdd_count(spark)
     df = spark.range(50)
     with pytest.raises(RuntimeError, match="boom"):
-        with _RoundCheckpointer(spark) as ck:
+        with Checkpointer(spark) as ck:
             ck(df.withColumn("y", F.col("id") * 2), "a")
             ck(df.withColumn("z", F.col("id") * 3), "b")
             raise RuntimeError("boom")
@@ -724,11 +724,11 @@ def test_round_checkpointer_abort_frees_everything(spark):
 
 
 def test_round_checkpointer_keep_none_holds_all_until_finish(spark):
-    from graflo_spark.ops.graphalgo import _RoundCheckpointer
+    from graflo_spark.ops.util import Checkpointer
 
     spark.catalog.clearCache()
     base = _persistent_rdd_count(spark)
-    with _RoundCheckpointer(spark, keep=None) as ck:
+    with Checkpointer(spark, keep=None) as ck:
         frames = [ck(spark.range(10 + i), f"s{i}") for i in range(4)]
         assert _persistent_rdd_count(spark) - base == 4
         merged = frames[0]

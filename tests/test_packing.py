@@ -651,8 +651,7 @@ def test_stream_pack_end_to_end(spark, tmp_path):
     from graflo_spark.streaming import replay_as_stream, stream_pack
 
     full = _docs(spark, n=300).filter(F.col("n_tok") > 0)
-    store = PackingStore(spark, str(tmp_path / "pk"), chunk_tokens=64,
-                         pin_results=True)
+    store = PackingStore(spark, str(tmp_path / "pk"), chunk_tokens=64)
     out_dir = str(tmp_path / "feed")
     q = stream_pack(
         replay_as_stream(spark, full.repartition(3)), store,

@@ -407,7 +407,7 @@ def test_pipeline_c4_stage_cleans_and_charges(spark):
     cfg = PipelineConfig(
         url_col="url", min_quality=0.0, min_tokens=3,
         c4_clean=True, c4_min_kept_lines=3,
-        splits={"train": 1.0}, chunk_tokens=8, persist_annotated=False,
+        splits={"train": 1.0}, chunk_tokens=8,
     )
     annotated = annotate(docs, None, cfg)
     ann = {r["doc_id"]: r for r in annotated.collect()}

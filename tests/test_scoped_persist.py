@@ -1,43 +1,103 @@
-"""scoped_persist (ops/util.py): within-invocation cache reuse WITHOUT
-session-lifetime CacheManager entries or cross-invocation plan-matching.
+"""Materialized intermediates: each is owned by the frame or call that made
+it, never by a CacheManager entry (ops/util.py ``Checkpointer``).
 
-Background (r14): ``minhash_lsh_candidates`` and
-``train_quality_classifier`` persisted intermediates and never
-unpersisted them. Spark's CacheManager splices a cached entry into every
-LATER query whose canonicalized plan matches, so a second invocation
-over the same path silently read the FIRST invocation's blocks — stale
-results if the files changed, and a benchmark run that skips the work
-being timed — while the entries accumulated for the session.
+Background: Spark's CacheManager keys a ``persist()`` on the canonicalized
+plan and splices it into every LATER query whose plan matches. Operators
+that persisted intermediates therefore let a second invocation over the
+same path read the FIRST invocation's blocks (stale results if the files
+changed), and a name-keyed registry that retired the previous generation
+on re-invocation made the previous invocation's frames recompute
+nondeterministic columns per consumer. Local checkpoints belong to the
+frame that reads them, so neither can happen.
 """
 
-import pytest
+import pandas as pd
 from pyspark.sql import functions as F
 
 from graflo_spark.ops import dedup as dd
 from graflo_spark.ops.quality_clf import train_quality_classifier
-from graflo_spark.ops.util import scoped_persist
 
 
-def test_single_generation_per_scope(spark):
-    a = spark.range(10).withColumn("x", F.col("id") * 2)
-    b = spark.range(10).withColumn("x", F.col("id") * 3)
-    pa = scoped_persist(a, "test.scope")
-    pa.count()
-    assert pa.storageLevel.useMemory
-    pb = scoped_persist(b, "test.scope")
-    pb.count()
-    # the previous generation was unpersisted: its storage level is reset
-    assert not pa.storageLevel.useMemory
-    assert pb.storageLevel.useMemory
-    # distinct scopes do not evict each other
-    pc = scoped_persist(a.withColumn("y", F.lit(1)), "test.scope2")
-    pc.count()
-    assert pb.storageLevel.useMemory and pc.storageLevel.useMemory
-    for df in (pb, pc):
-        df.unpersist()
-    from graflo_spark.ops.util import _SCOPED_CACHE
-    _SCOPED_CACHE.pop("test.scope", None)
-    _SCOPED_CACHE.pop("test.scope2", None)
+def _team_docs(spark, n_teams):
+    """``(team_id, members)`` docs whose row ORDER changes on every
+    evaluation, so ``monotonically_increasing_id`` assigns each
+    evaluation's ids to different teams."""
+    rows = [(t, [t * 10 + i for i in range(4)]) for t in range(n_teams)]
+    src = spark.createDataFrame(
+        rows, "team_id long, members array<long>").coalesce(1)
+
+    def shuffled(it):
+        pdfs = list(it)
+        if pdfs:
+            yield pd.concat(pdfs).sample(frac=1.0).reset_index(drop=True)
+
+    return src.mapInPandas(shuffled, src.schema)
+
+
+def test_recompile_keeps_first_batch_wiring(spark):
+    """A second compile under the same resource name must not change what
+    the FIRST batch reads. The descend edges join the root branch to the
+    member branch on the base's ``monotonically_increasing_id``; if the
+    base is recomputed per branch over a reshuffled input, every
+    team->customer edge joins the wrong team."""
+    from graflo_spark.compiler import compile_resource
+    from graflo_spark.manifest import CoreSchema, Edge, Field, FieldType, Vertex
+    from graflo_spark.steps import DescendStep, ResourceConfig, VertexStep
+
+    schema = CoreSchema(
+        vertices=[
+            Vertex("team", [Field("team_id", FieldType.INT)],
+                   identity=["team_id"]),
+            Vertex("customer", [Field("c_id", FieldType.INT)],
+                   identity=["c_id"]),
+        ],
+        edges=[Edge("team", "customer")])
+    res = ResourceConfig("teams", steps=[
+        VertexStep(name="team"),
+        DescendStep(key="members", steps=[
+            VertexStep(name="customer", mapping={"c_id": "__item"})]),
+    ])
+
+    def miswired(batch):
+        (edges,) = batch.edges.values()
+        rows = edges.select("_src_team_id", "_dst_c_id").collect()
+        return sum(c // 10 != t for t, c in rows), len(rows)
+
+    first = compile_resource(schema, res, _team_docs(spark, 30))
+    assert miswired(first) == (0, 120)
+    compile_resource(schema, res, _team_docs(spark, 5))
+    assert miswired(first) == (0, 120)
+
+
+def test_operators_leave_no_cache_manager_entries(spark):
+    """minhash_dedup, near-dup clustering, bm25_topk and the compiler each
+    materialize an intermediate; none may leave a CacheManager entry that
+    a later query could plan-match."""
+    from graflo_spark.compiler import compile_resource
+    from graflo_spark.manifest import CoreSchema, Field, IdentityMode, Vertex
+    from graflo_spark.ops import retrieval as rt
+    from graflo_spark.steps import ResourceConfig, VertexStep
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"),
+         (3, "lazy dogs sleep all day long"), (4, None)],
+        "doc_id long, text string")
+    assert dd.minhash_dedup(docs, "doc_id", "text").count() == 3
+    assert dd.minhash_near_dup_clusters(docs).count() == 4
+    qs = spark.createDataFrame([(1, "quick fox")], "query_id long, text string")
+    assert rt.bm25_topk(qs, docs, k=2).count() == 2
+    schema = CoreSchema(
+        vertices=[Vertex("note", [Field("body")], identity=[],
+                         identity_mode=IdentityMode.BLANK)],
+        edges=[])
+    res = ResourceConfig(name="notes_cache", steps=[VertexStep(name="note")],
+                         infer_edges=False)
+    batch = compile_resource(
+        schema, res, spark.createDataFrame([("a",), ("b",)], "body string"))
+    assert batch.vertices["note"].count() == 2
+    assert cache.isEmpty()
 
 
 def test_minhash_candidates_reread_changed_files(spark, tmp_path):
@@ -68,10 +128,9 @@ def test_compile_reread_changed_files(spark, tmp_path):
     matched spliced into the previous compile's blocks)."""
     from graflo_spark.compiler import compile_resource
     from graflo_spark.manifest import CoreSchema, Field, IdentityMode, Vertex
-    from graflo_spark.ops.util import _SCOPED_CACHE
     from graflo_spark.steps import ResourceConfig, VertexStep
 
-    # BLANK identity => _doc_id_matters() => the base-persist path runs
+    # BLANK identity => _doc_id_matters() => the base-checkpoint path runs
     schema = CoreSchema(
         vertices=[Vertex("note", [Field("body")], identity=[],
                          identity_mode=IdentityMode.BLANK)],
@@ -83,22 +142,12 @@ def test_compile_reread_changed_files(spark, tmp_path):
         .coalesce(1).write.mode("overwrite").parquet(p)
     first = compile_resource(schema, res, spark.read.parquet(p))
     assert first.vertices["note"].count() == 2
-    base1 = _SCOPED_CACHE.get("compiler.base.notes_stale")
-    assert base1 is not None and base1.storageLevel.useMemory
     spark.createDataFrame([("x",), ("y",), ("z",)], "body string") \
         .coalesce(1).write.mode("overwrite").parquet(p)
     second = compile_resource(schema, res, spark.read.parquet(p))
-    # THE assertion: pre-fix, the second compile's persist plan-matched
-    # the first compile's cached blocks and this read 2 stale rows.
-    # (storageLevel on base1 can't witness the retirement here: both
-    # compiles scan the same path, so CacheManager answers base1's plan
-    # with the SECOND generation's entry — the retrain test covers the
-    # distinct-plan case.)
+    # THE assertion: with a persisted base, the second compile's plan
+    # matched the first compile's cached blocks and this read 2 stale rows.
     assert second.vertices["note"].count() == 3
-    # single generation per scope: the cache advanced to a new frame
-    base2 = _SCOPED_CACHE.pop("compiler.base.notes_stale", None)
-    assert base2 is not None and base2 is not base1
-    base2.unpersist()
 
 
 def test_pipeline_reinvoke_reflects_changed_files(spark, tmp_path):

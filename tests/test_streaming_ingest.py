@@ -109,6 +109,60 @@ def test_stream_ingest_graph_versions_are_batch_aligned(spark, tables, tmp_path)
     assert seen[-1] == src.count()
 
 
+def test_stream_ingest_holds_no_blocks_across_batches(spark, tmp_path):
+    """Each micro-batch's compile checkpoints its base (a descend resource
+    with no doc_key); the handle frees it after the batch's write, so the
+    persistent RDDs after N micro-batches are those after one."""
+    from graflo_spark.steps import DescendStep
+
+    schema = CoreSchema(
+        vertices=[
+            Vertex("team", [Field("team_id", FieldType.INT)],
+                   identity=["team_id"]),
+            Vertex("customer", [Field("c_id", FieldType.INT)],
+                   identity=["c_id"]),
+        ],
+        edges=[Edge("team", "customer")])
+    res = ResourceConfig("teams", steps=[
+        VertexStep(name="team"),
+        DescendStep(key="members", steps=[
+            VertexStep(name="customer", mapping={"c_id": "__item"})]),
+    ])
+    store = GraphStore(spark, str(tmp_path / "g"), schema)
+    store.apply_target_schema()
+    src = str(tmp_path / "in")
+    ddl = "team_id long, members array<long>"
+
+    def add_file(t):
+        spark.createDataFrame([(t, [t * 10, t * 10 + 1])], ddl) \
+            .coalesce(1).write.mode("append").parquet(src)
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs()
+                   .keySet().toArray())
+
+    add_file(0)
+    stream = spark.readStream.schema(ddl).option(
+        "maxFilesPerTrigger", 1).parquet(src)
+    q = stream_ingest(stream, schema, res, store,
+                      checkpoint_dir=str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        after_one = persistent_ids()
+        for t in range(1, 4):
+            add_file(t)
+        q.processAllAvailable()
+        after_n = persistent_ids()
+        progress = q.recentProgress
+    finally:
+        q.stop()
+
+    assert sum(p["numInputRows"] > 0 for p in progress) == 4  # 4 batches
+    assert store.read_vertices("team").count() == 4
+    assert after_n - after_one == set()
+    assert len(after_n) <= len(after_one)
+
+
 def test_hydrate_returns_full_docs(spark, sf_dir):
     from graflo_spark.catalog import star_view
     from graflo_spark.query import Direction

@@ -1403,7 +1403,7 @@ def graph_bench(spark, base_dir: str, scaled_dir: str, factor: int,
     """Graph-analytics scaling: the trade-graph iterative family and the
     co-purchase wedge/peel family at base and scaled — run back-to-back
     in ONE session, which is itself part of the measurement: per-round
-    localCheckpoint blocks are reclaimed by _RoundCheckpointer, so the
+    localCheckpoint blocks are reclaimed by ops.util.Checkpointer, so the
     catalog must complete without the GCLocker accumulation wedge the
     r5 run hit. The replica blow-up keeps part/order keys disjoint, so
     wedges, triangles, cores and candidate pairs are replica-local —
