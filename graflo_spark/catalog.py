@@ -475,9 +475,10 @@ UNION ALL SELECT 'edge', 'supplier__located_in__nation', COUNT(*) FROM supplier 
 def graph_type_counts(spark, sf_dir):
     """Full star-schema graph build -> per-type sizes (the reference's golden
     *_sizes.yaml check; SURVEY §5). Exercises 7 resources, lookup_only
-    endpoints, inferred edges, identity dedup — the dedup-count fused into
-    ONE two-level aggregation over all 14 types (2 exchanges total vs 28
-    for per-type dedup-then-count; see GraphBatch.counts_distinct)."""
+    endpoints, inferred edges, identity dedup. Each of the 14 types costs
+    two exchanges (28 in the plan, no joins): the compile dedup's hash
+    exchange, which counts_distinct's own dedup reuses, and one single-row
+    count (see GraphBatch.counts_distinct)."""
     return build_star_graph_raw(spark, sf_dir).counts_distinct(star_schema())
 
 

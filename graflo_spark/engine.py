@@ -3,10 +3,11 @@
 Reference: graflo/hq/graph_engine.py:83-503 (introspect / sample /
 infer_manifest / create namespace / define schema / ingest) and :673-757
 (export_graph / migrate_graph). Spark design: resources are DataFrames, the
-target is a :class:`GraphStore`; ingest = compile each resource to a
-GraphBatch and upsert, in declaration order (later resources may read state
-written by earlier ones — reference caster.py:520-527; here that means
-reading back just-written tables).
+target is a :class:`GraphStore`; ingest = compile every resource to a
+GraphBatch (driver-only: compiling never reads the store), then write them
+all with ONE ``GraphStore.write_batch``: each table receives its frames in
+resource declaration order, distinct tables are written concurrently, and
+the ingest publishes one graph version.
 """
 
 from __future__ import annotations
@@ -25,8 +26,10 @@ from graflo_spark.store import GraphStore
 @dataclass
 class IngestionParams:
     """Tuned knobs (reference hq/ingestion_parameters.py). Spark subsumes
-    batch_size/prefetch/process-pool knobs; what remains meaningful is
-    scoping + caps."""
+    batch_size/prefetch; the reference's worker-pool knobs have no
+    counterpart because ``GraphStore.write_batch`` sizes its table lanes
+    from ``defaultParallelism``. What remains meaningful is scoping +
+    caps."""
 
     resources: list[str] | None = None  # allow-list (reference scope resolve)
     max_items: int | None = None  # per-resource row cap (reference :121-128)
@@ -49,16 +52,20 @@ class GraphEngine:
         resources: list[tuple[ResourceConfig, DataFrame]],
         params: IngestionParams | None = None,
     ) -> GraphStore:
-        """Run resources in declaration order (reference caster.py:481-539);
-        each resource compiles to one lazy DAG and upserts into the store."""
+        """Compile each resource to one lazy DAG (reference
+        caster.py:481-539), then write every batch in one
+        ``write_batch``: a table's frames land in resource declaration
+        order, distinct tables land concurrently, and the call publishes
+        one graph version — none when no resource is selected."""
         params = params or IngestionParams()
-        for res, df in resources:
-            if params.resources is not None and res.name not in params.resources:
-                continue
-            if params.max_items is not None:
-                df = df.limit(params.max_items)
-            batch = compile_resource(self.schema, res, df)
-            self.store.write_batch(batch, dry=params.dry)
+        batches = [
+            compile_resource(
+                self.schema, res,
+                df if params.max_items is None else df.limit(params.max_items))
+            for res, df in resources
+            if params.resources is None or res.name in params.resources
+        ]
+        self.store.write_batch(*batches, dry=params.dry)
         return self.store
 
     def define_and_ingest(

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from graflo_spark.ops.util import Checkpointer
+from graflo_spark.ops.util import Checkpointer, small_input
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -471,23 +471,23 @@ def pagerank(
         # collected edges, so a fitting graph skips the nodes
         # checkpoint + count entirely. A large graph pays one bounded
         # take (~a few MB) on the already-checkpointed edge blocks.
-        if tol is None and driver_collapse_max_edges > 0:
-            rows = edges.take(driver_collapse_max_edges + 1)
-            if len(rows) <= driver_collapse_max_edges:
-                from pyspark.sql import types as T
+        rows = (small_input(edges, driver_collapse_max_edges)
+                if tol is None else None)
+        if rows is not None:
+            from pyspark.sql import types as T
 
-                ranks_local = _driver_pagerank(
-                    rows, damping, max_iter, personalized)
-                node_t = edges.schema["src"].dataType
-                schema = T.StructType([
-                    T.StructField("node", node_t),
-                    T.StructField("rank", T.DoubleType())])
-                # one slice — see _driver_components on why not coalesce
-                out = pairs.sparkSession.createDataFrame(
-                    pairs.sparkSession.sparkContext.parallelize(
-                        ranks_local, 1),
-                    schema)
-                return out
+            ranks_local = _driver_pagerank(
+                rows, damping, max_iter, personalized)
+            node_t = edges.schema["src"].dataType
+            schema = T.StructType([
+                T.StructField("node", node_t),
+                T.StructField("rank", T.DoubleType())])
+            # one slice — see _driver_components on why not coalesce
+            out = pairs.sparkSession.createDataFrame(
+                pairs.sparkSession.sparkContext.parallelize(
+                    ranks_local, 1),
+                schema)
+            return out
         nodes = ck(
             edges.select(F.col("src").alias("node"))
             .unionAll(edges.select(F.col("dst").alias("node")))
@@ -635,21 +635,20 @@ def label_propagation(
         edges = ck(_symmetrize(
             pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))),
             "edges")
-        if driver_collapse_max_edges > 0:
-            rows = edges.take(driver_collapse_max_edges + 1)
-            if len(rows) <= driver_collapse_max_edges:
-                from pyspark.sql import types as T
+        rows = small_input(edges, driver_collapse_max_edges)
+        if rows is not None:
+            from pyspark.sql import types as T
 
-                node_t = edges.schema["a"].dataType
-                schema = T.StructType([
-                    T.StructField("node", node_t),
-                    T.StructField("label", node_t)])
-                # one slice — see _driver_components on why not coalesce
-                out = pairs.sparkSession.createDataFrame(
-                    pairs.sparkSession.sparkContext.parallelize(
-                        _driver_lpa(rows, max_iter), 1),
-                    schema)
-                return out
+            node_t = edges.schema["a"].dataType
+            schema = T.StructType([
+                T.StructField("node", node_t),
+                T.StructField("label", node_t)])
+            # one slice — see _driver_components on why not coalesce
+            out = pairs.sparkSession.createDataFrame(
+                pairs.sparkSession.sparkContext.parallelize(
+                    _driver_lpa(rows, max_iter), 1),
+                schema)
+            return out
         labels = (
             edges.select(F.col("a").alias("node")).distinct()
             .withColumn("label", F.col("node"))

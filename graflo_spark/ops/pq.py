@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from graflo_spark.ops.util import ensure_min_parallelism
+from graflo_spark.ops.util import ensure_min_parallelism, small_input
 
 
 def _lloyd(x: "np.ndarray", k: int, iters: int, seed: int) -> "np.ndarray":
@@ -403,11 +403,8 @@ def pq_topk(
     partitions and merges them in arrival order).
     """
     q_n = _queries(queries, query_id, query_vec)
-    # take(N+1) bounds the strategy probe itself — never a full count of
-    # an arbitrarily large query set — and when the driver path wins, the
-    # probe's rows ARE the full query set: no second collect/scan
-    q_rows = q_n.take(max_driver_queries + 1)
-    if len(q_rows) > max_driver_queries:
+    q_rows = small_input(q_n, max_driver_queries)
+    if q_rows is None:
         return _pq_topk_join(q_n, codes, book, k, exclude_self)
     qids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
     luts = _luts([r["v"] for r in q_rows], book)

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from graflo_spark.ops.util import small_input
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -283,13 +285,11 @@ def build_ivf_index(
         F.col(corpus_id).alias("neighbor_id"),
         F.col(corpus_vec).cast("array<double>").alias("c_vec"),
     )
-    if driver_fit_max_rows > 0:
-        rows = c.take(driver_fit_max_rows + 1)
-        if len(rows) <= driver_fit_max_rows:
-            cents = _driver_kmeans_fit(rows, n_centroids, seed, max_iter)
-            if cents is not None:
-                return assign_to_centroids(
-                    corpus, cents, corpus_id, corpus_vec)
+    rows = small_input(c, driver_fit_max_rows)
+    if rows is not None:
+        cents = _driver_kmeans_fit(rows, n_centroids, seed, max_iter)
+        if cents is not None:
+            return assign_to_centroids(corpus, cents, corpus_id, corpus_vec)
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 

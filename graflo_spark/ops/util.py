@@ -29,6 +29,19 @@ def py_md5_bits(s: str | None, hex_chars: int) -> int | None:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:hex_chars], 16)
 
 
+def small_input(df: DataFrame, bound: int) -> list | None:
+    """The rows of ``df`` when it has at most ``bound`` of them, else None.
+
+    The driver fast paths' probe: one bounded ``take(bound + 1)``, never a
+    full count, and when the input fits the probe's rows ARE the input
+    (no second collect). ``bound <= 0`` returns None without a job — the
+    fast paths' way of forcing the distributed formulation."""
+    if bound <= 0:
+        return None
+    rows = df.take(bound + 1)
+    return rows if len(rows) <= bound else None
+
+
 def ensure_min_parallelism(df: DataFrame, min_parts: int | None = None,
                            probe: bool = True) -> DataFrame:
     """Repartition up when the scan has fewer partitions than cores.

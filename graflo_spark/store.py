@@ -43,6 +43,12 @@ referenced are deleted — a reader/writer pinned to an expired version
 for longer than the retention window can fail mid-scan, the standard
 table-format constraint.
 
+Batch writes (``write_batch``) run one lane per table: a table's frames
+land in the order given, distinct tables land concurrently on a bounded
+driver thread pool (each table's commit is independent, so lanes never
+contend), and one graph-level manifest then pins every table's new
+version — readers of ``as_view_at`` see the whole call or none of it.
+
 Full-table rewrites (schema evolution ops) still go through versioned
 snapshots (`_write_snapshot`), which invalidate the bucketed layout; the
 next upsert re-buckets from the snapshot.
@@ -50,12 +56,15 @@ next upsert re-buckets from the snapshot.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,6 +77,12 @@ BUCKET_COL = "__b"
 # Spark's default spark.sql.files.maxPartitionBytes: a bucket of this size
 # is one scan split and one merge task.
 TARGET_BUCKET_BYTES = 128 * 1024**2
+
+
+def _run_lane(writes: list) -> None:
+    """Apply one table's writes in order, dropping each once it lands."""
+    while writes:
+        writes.pop(0)()
 
 
 def _fit_buckets(nbytes: float, at_least: int = 1) -> int:
@@ -623,6 +638,9 @@ class GraphStore:
         if dry:
             df.explain()
             return
+        self._upsert_vertices(name, df)
+
+    def _upsert_vertices(self, name: str, df: DataFrame) -> None:
         declared = self.schema.vertex(name).identity_fields
         missing = [f for f in declared if f not in df.columns]
         if missing:
@@ -682,6 +700,11 @@ class GraphStore:
         if dry:
             df.explain()
             return
+        self._insert_edges(eid, df, on_duplicate)
+
+    def _insert_edges(
+        self, eid: EdgeId, df: DataFrame, on_duplicate: str = "ignore"
+    ) -> None:
         table_dir = self._table_dir("edges", eid.table_name())
         key_cols = [c for c in df.columns if c.startswith(("_src_", "_dst_"))]
         if "_relation" in df.columns:
@@ -772,13 +795,34 @@ class GraphStore:
         except KeyError:
             return False
 
-    def write_batch(self, batch: GraphBatch, dry: bool = False) -> None:
-        """Write every table of the batch, then publish ONE graph-level
+    def write_batch(self, *batches: GraphBatch, dry: bool = False) -> None:
+        """Write every table of ``batches``, then publish ONE graph-level
         commit pinning the per-table versions — a reader going through
         :meth:`as_view_at` sees old-graph or new-graph, never new
         vertices with old edges (the torn-snapshot gap per-table commits
         alone leave open; the reference writes collections independently,
         hq/db_writer.py:149-204, so this exceeds parity).
+
+        LANES: each table is one lane that applies that table's frames in
+        the order the batches give them, exactly as consecutive
+        single-table writes would (a later vertex frame's non-null values
+        win; an ``ignore`` edge keeps its first tuple). Distinct tables
+        are written concurrently, on min(#lanes, ``defaultParallelism``)
+        driver threads — the reference's per-collection parallel upserts
+        (hq/db_writer.py:393-504). Each lane inherits the caller's Spark
+        local properties (job group, description, scheduler pool), so
+        ``cancelJobGroup`` and job attribution see every write job. A lane
+        lets go of each frame once it is written; the frames stay
+        reachable for as long as the caller holds its batches.
+
+        FAILURE: every lane runs to completion (no thread outlives the
+        call); then the error of the first failing lane, in lane order, is
+        raised and no graph version is published. Tables whose lanes
+        succeeded keep their committed table versions, which the next
+        graph commit picks up — a retry is idempotent by merge-on-identity.
+
+        ``dry=True`` explains each frame serially and writes nothing; a
+        call with no batch publishes nothing.
 
         LINEARIZATION under CONCURRENT ``write_batch`` callers (documented
         contract, property-tested in
@@ -786,19 +830,45 @@ class GraphStore:
         each published graph version is a consistent point-in-time
         snapshot of COMMITTED per-table versions, and pinned table
         versions are monotonically non-decreasing across graph versions —
-        but a version published while two batches interleave may pin a MIX
-        of the two batches' tables (each table individually complete for
-        the rows it committed). Batch-boundary atomicity is guaranteed
+        but a version published while two calls interleave may pin a MIX
+        of the two calls' tables (each table individually complete for
+        the rows it committed). Call-boundary atomicity is guaranteed
         only per writer: the caller's own commit (and every later one)
-        contains its whole batch. Writers needing batch-aligned versions
-        serialize externally (foreachBatch already is — see
+        contains all of its batches. Writers needing batch-aligned
+        versions serialize externally (foreachBatch already is — see
         streaming.stream_ingest and the batch-alignment test)."""
-        for name, df in batch.vertices.items():
-            self.upsert_vertices(name, df, dry=dry)
-        for eid, df in batch.edges.items():
-            self.insert_edges(eid, df, dry=dry)
-        if not dry:
-            self.commit_graph()
+        if dry:
+            for batch in batches:
+                for df in (*batch.vertices.values(), *batch.edges.values()):
+                    df.explain()
+            return
+        if not batches:
+            return
+        # lane per table dir: one writer per table, so lanes never race
+        # each other's optimistic commits
+        lanes: dict[str, list] = {}
+        for batch in batches:
+            for name, df in batch.vertices.items():
+                lanes.setdefault(self._table_dir("vertices", name), []).append(
+                    functools.partial(self._upsert_vertices, name, df))
+            for eid, df in batch.edges.items():
+                lanes.setdefault(
+                    self._table_dir("edges", eid.table_name()), []).append(
+                    functools.partial(self._insert_edges, eid, df))
+        if lanes:
+            workers = min(len(lanes), self.spark.sparkContext.defaultParallelism)
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                # wrapped per lane: each lane gets its own copy of the
+                # caller's local properties, which Spark mutates per job
+                futures = [
+                    pool.submit(inheritable_thread_target(self.spark)(_run_lane),
+                                writes)
+                    for writes in lanes.values()
+                ]
+            errors = [e for f in futures if (e := f.exception()) is not None]
+            if errors:
+                raise errors[0]
+        self.commit_graph()
 
     # ------------------------------------------- graph-level root manifest
     def _graph_commits_dir(self) -> str:

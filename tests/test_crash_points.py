@@ -29,10 +29,12 @@ sequence (default 4), SPARK_GRAFT_CRASH_BASE first seed (default 3000).
 import os
 import random
 import shutil
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+from graflo_spark.container import GraphBatch
 from graflo_spark.manifest import CoreSchema, Edge, EdgeId, Field, FieldType, Vertex
 from graflo_spark.ops import packing as pk
 from graflo_spark.ops import simsearch as ss
@@ -56,6 +58,9 @@ class _Killer:
         self.count = 0
         self.kill_at = None
         self._real = {}
+        # write_batch lanes mutate from several threads: the count and
+        # the kill decision must be one step, so exactly one mutation dies
+        self._lock = threading.Lock()
 
     def __enter__(self):
         for mod, name in _PATCH:
@@ -63,10 +68,12 @@ class _Killer:
             self._real[(mod, name)] = real
 
             def wrapped(*a, __real=real, **k):
-                self.count += 1
-                if self.kill_at is not None and self.count == self.kill_at:
+                with self._lock:
+                    self.count += 1
+                    n = self.count
+                if self.kill_at is not None and n == self.kill_at:
                     raise KillPoint(
-                        f"killed before mutation #{self.count} "
+                        f"killed before mutation #{n} "
                         f"({__real.__module__}.{__real.__name__}{a[:2]})")
                 return __real(*a, **k)
 
@@ -232,6 +239,51 @@ def test_crash_sweep_graph_rebucket(spark, tmp_path, monkeypatch):
     assert n >= 2
     ref = GraphStore(spark, str(tmp_path / "ref"), _SCHEMA)
     assert ref._current_commit(ref._table_dir("vertices", "person"))[2] > 1
+
+
+_KNOWS = EdgeId("person", "person", "knows")
+
+
+def _gbuild_graph(spark, path):
+    store = GraphStore(spark, path, _SCHEMA)
+    store.apply_target_schema()
+    store.write_batch(GraphBatch(
+        vertices={"person": spark.createDataFrame(
+            [(1, "a"), (2, "b")], "pid int, nm string")},
+        edges={_KNOWS: spark.createDataFrame(
+            [(1, 2)], "_src_pid int, _dst_pid int")}))
+    return store
+
+
+def _gread_graph(spark, path):
+    """The reader-visible GRAPH: both tables at one graph version."""
+    view = GraphStore(spark, path, _SCHEMA).as_view_at()
+    return {
+        "person": sorted((r["pid"], r["nm"])
+                         for r in view.vertices["person"].collect()),
+        "knows": sorted((r["_src_pid"], r["_dst_pid"])
+                        for r in view.edges[_KNOWS].collect()),
+    }
+
+
+def test_crash_sweep_graph_write_batch(spark, tmp_path):
+    """A two-table write_batch runs its vertex and edge lanes
+    concurrently: a kill in one lane lets the other commit its table,
+    but no graph version is published, so a reader through as_view_at
+    sees the old graph or the new one, never the new vertices with the
+    old edges; the retry converges."""
+
+    def op(store):
+        store.write_batch(GraphBatch(
+            vertices={"person": spark.createDataFrame(
+                [(2, "B"), (3, "c")], "pid int, nm string")},
+            edges={_KNOWS: spark.createDataFrame(
+                [(2, 3), (3, 1)], "_src_pid int, _dst_pid int")}))
+
+    n = _sweep(tmp_path, lambda p: _gbuild_graph(spark, p), op,
+               lambda p: op(GraphStore(spark, p, _SCHEMA)),
+               lambda p: _gread_graph(spark, p))
+    assert n >= 4  # two table publishes + the graph publish, at least
 
 
 # ----------------------------------------------------------- PackingStore

@@ -80,6 +80,23 @@ HEADLINES = [
 ]
 
 
+# Run-specific plan tokens: expression ids (``doc_id#845L``), RDD ids with
+# the call site that made the RDD, and temp index directories. They change
+# on every run, so they are masked before PLANS.md is written and a
+# regeneration's diff shows only real plan drift.
+_VOLATILE = [
+    (re.compile(r"(?<=[\w)])#\d+"), "#N"),
+    (re.compile(r"RDD\[\d+\] at (\w+) at [^,\]\s]+"), r"RDD[N] at \1"),
+    (re.compile(r"graflo_idx_\w+"), "graflo_idx_*"),
+]
+
+
+def mask_volatile(text: str) -> str:
+    for pattern, repl in _VOLATILE:
+        text = pattern.sub(repl, text)
+    return text
+
+
 def formatted_plan(df) -> str:
     from pyspark.sql.session import SparkSession
 
@@ -269,7 +286,7 @@ def main() -> int:
     else:
         merged = out.getvalue()
     with open("PLANS.md", "w") as f:
-        f.write(merged)
+        f.write(mask_volatile(merged))
     print("wrote PLANS.md")
     return 0
 
