@@ -80,9 +80,20 @@ TARGET_BUCKET_BYTES = 128 * 1024**2
 
 
 def _run_lane(writes: list) -> None:
-    """Apply one table's writes in order, dropping each once it lands."""
-    while writes:
-        writes.pop(0)()
+    """Apply one table's writes in order."""
+    for write in writes:
+        write()
+
+
+def _inheriting(spark: SparkSession, fn):
+    """``fn`` wrapped to run with a copy of the calling thread's Spark
+    local properties (job group, description, scheduler pool) and session
+    tags. With pinned threads off (``PYSPARK_PIN_THREAD=false``) pyspark
+    returns the session itself instead of a wrapper: local properties then
+    belong to whichever JVM thread serves a call, not to a Python thread,
+    so there is nothing to copy and ``fn`` runs as is."""
+    wrap = inheritable_thread_target(spark)
+    return wrap(fn) if callable(wrap) else fn
 
 
 def _fit_buckets(nbytes: float, at_least: int = 1) -> int:
@@ -811,9 +822,12 @@ class GraphStore:
         driver threads — the reference's per-collection parallel upserts
         (hq/db_writer.py:393-504). Each lane inherits the caller's Spark
         local properties (job group, description, scheduler pool), so
-        ``cancelJobGroup`` and job attribution see every write job. A lane
-        lets go of each frame once it is written; the frames stay
-        reachable for as long as the caller holds its batches.
+        ``cancelJobGroup`` and job attribution see every write job (with
+        pinned threads off, lanes run without that copy, as any Python
+        thread would). Lanes call the private single-table bodies, so the
+        public ``upsert_vertices`` / ``insert_edges`` never run on a lane
+        thread. Every frame stays reachable until the call returns: a
+        resource's compile checkpoint lives as long as its batch.
 
         FAILURE: every lane runs to completion (no thread outlives the
         call); then the error of the first failing lane, in lane order, is
@@ -821,8 +835,9 @@ class GraphStore:
         succeeded keep their committed table versions, which the next
         graph commit picks up — a retry is idempotent by merge-on-identity.
 
-        ``dry=True`` explains each frame serially and writes nothing; a
-        call with no batch publishes nothing.
+        ``dry=True`` explains each frame serially, on the caller's thread,
+        through the public ``dry`` methods, and writes nothing; a call
+        with no batch publishes nothing.
 
         LINEARIZATION under CONCURRENT ``write_batch`` callers (documented
         contract, property-tested in
@@ -839,8 +854,10 @@ class GraphStore:
         streaming.stream_ingest and the batch-alignment test)."""
         if dry:
             for batch in batches:
-                for df in (*batch.vertices.values(), *batch.edges.values()):
-                    df.explain()
+                for name, df in batch.vertices.items():
+                    self.upsert_vertices(name, df, dry=True)
+                for eid, df in batch.edges.items():
+                    self.insert_edges(eid, df, dry=True)
             return
         if not batches:
             return
@@ -861,8 +878,7 @@ class GraphStore:
                 # wrapped per lane: each lane gets its own copy of the
                 # caller's local properties, which Spark mutates per job
                 futures = [
-                    pool.submit(inheritable_thread_target(self.spark)(_run_lane),
-                                writes)
+                    pool.submit(_inheriting(self.spark, _run_lane), writes)
                     for writes in lanes.values()
                 ]
             errors = [e for f in futures if (e := f.exception()) is not None]

@@ -110,6 +110,19 @@ def test_lane_jobs_run_in_callers_job_group(spark, tmp_path):
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
+def test_lanes_run_with_pinned_threads_off(spark, tmp_path, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target(session)``
+    returns the session itself; lanes must then run unwrapped."""
+    import graflo_spark.store as store_mod
+
+    monkeypatch.setattr(store_mod, "inheritable_thread_target",
+                        lambda f=None: f)
+    st = _store(spark, tmp_path)
+    st.write_batch(_three_tables(spark, 0))
+    assert st.graph_versions() == [1]
+    assert _snapshot(st)["doc"] == [(0, "a", "x"), (1, "b", "y")]
+
+
 def test_lane_applies_batches_in_order(spark, tmp_path):
     """write_batch(b1, b2) with the same identity in both: b2's non-null
     values win, and b1's value survives where b2 is NULL — on every table,
